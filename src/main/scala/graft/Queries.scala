@@ -3097,10 +3097,13 @@ object Queries {
   // feature-hashed unigram vectors (TextAnalysis.hashedTfVector): the
   // hashing-trick featurizer that makes the semantic plane runnable at
   // ingest without a model-served embedding — per-token 48-bit md5 hash
-  // rebuilt digit-wise in the oracle, bucket = h mod dim, sign = bit 20
+  // rebuilt digit-wise in the oracle, bucket = h mod dim, sign = bit 20;
+  // one (doc_id, bucket, weight) row per vector slot, so the result has
+  // only scalar columns
   private val q95 = QueryDef("q95_hashed_tf",
     (s, d) => TextAnalysis.hashedTfVector(
-      rd(s, d, "documents"), "doc_id", "text", dim = 32),
+      rd(s, d, "documents"), "doc_id", "text", dim = 32)
+      .select(col("doc_id"), posexplode(col("tf_vec")).as(Seq("bucket", "weight"))),
     Some("""WITH tok AS (SELECT doc_id,
         string_split_regex(trim(coalesce(text, '')), '\s+') AS ts
         FROM documents),
@@ -3109,11 +3112,13 @@ object Queries {
             j -> cast(strpos('0123456789abcdef', substr(md5(t), j, 1)) - 1 AS BIGINT)
               * ([17592186044416,1099511627776,68719476736,4294967296,268435456,
                   16777216,1048576,65536,4096,256,16,1])[j]))) AS hs
-        FROM tok)
-      SELECT doc_id, list_transform(generate_series(0, 31), i ->
+        FROM tok),
+      v AS (SELECT doc_id, list_transform(generate_series(0, 31), i ->
           cast(coalesce(list_sum(list_transform(list_filter(hs, h -> h % 32 = i),
             h -> ((h // 1048576) % 2) * 2 - 1)), 0) AS BIGINT)) AS tf_vec
-      FROM hv"""))
+        FROM hv)
+      SELECT doc_id, cast(g.i - 1 AS INTEGER) AS bucket, tf_vec[g.i] AS weight
+      FROM v, generate_series(1, 32) AS g(i)"""))
 
   // BPE tokenizer-training plane (Bpe.scala): q96 is the learn loop's
   // inner pair-count step at round 0 (raw chars, freq-weighted) — the

@@ -12,9 +12,9 @@ import graft.streaming._
  * The spark-submit-able streaming job — the engine's equivalent of the
  * reference's deployable topologies (`E1_GrayScaledTopology.java:43-69`,
  * `stormcv-deploy/.../DeploymentTopology.java:41-82`): page stream →
- * deterministic extraction → per-host sessionization → exactly-once
- * epoch-manifest table, resumable from checkpoint, with per-batch
- * offset/watermark metrics.
+ * deterministic extraction → two-phase per-host sessionization →
+ * exactly-once epoch-manifest table, resumable from checkpoint, with
+ * per-batch offset/watermark metrics.
  *
  * Usage (all args optional):
  *   spark-submit --class graft.app.PagePipelineApp app.jar \
@@ -357,7 +357,8 @@ object PagePipelineApp {
           applyWatermark = false).toDF(),
           StreamDedup.keptInBatch _)
       } else {
-        (Sessionize.fromPages(spark, pages).toDF(), identity[org.apache.spark.sql.DataFrame] _)
+        (SessionizeTwoPhase.fromPages(spark, pages).toDF(),
+          identity[org.apache.spark.sql.DataFrame] _)
       }
 
     // --buckets N writes the bucket-partitioned table layout (pruned

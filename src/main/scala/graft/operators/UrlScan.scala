@@ -30,16 +30,22 @@ object UrlScan {
   @inline private def isTerm(c: Char): Boolean =
     c == '\n' || c == '\r' || c == '\u0085' || c == '\u2028' || c == '\u2029'
 
+  /** Where Java's `$` (no MULTILINE) matches before the end of input:
+    * the start of a final \n / \r\n / \r / NEL / LS / PS, else the
+    * length. A pattern ending in `$` whose last char cannot be a line
+    * terminator can only match up to this boundary. */
+  private def dollarEnd(s: String): Int = {
+    val n = s.length
+    if (n >= 2 && s.charAt(n - 2) == '\r' && s.charAt(n - 1) == '\n') n - 2
+    else if (n >= 1 && isTerm(s.charAt(n - 1))) n - 1
+    else n
+  }
+
   /** Exact `regexp_replace(s, "#.*$", "")` (Java semantics): drop from
     * the first '#' that can reach `$` — i.e. the first '#' after the
-    * last line terminator that precedes the `$` boundary (end of input,
-    * or the start of a final \n / \r\n / \r / NEL / LS / PS). */
+    * last line terminator that precedes the [[dollarEnd]] boundary. */
   def stripFragment(s: String): String = {
-    val n = s.length
-    val e =
-      if (n >= 2 && s.charAt(n - 2) == '\r' && s.charAt(n - 1) == '\n') n - 2
-      else if (n >= 1 && isTerm(s.charAt(n - 1))) n - 1
-      else n
+    val e = dollarEnd(s)
     var t = -1
     var i = 0
     while (i < e) { if (isTerm(s.charAt(i))) t = i; i += 1 }
@@ -82,14 +88,23 @@ object UrlScan {
   @inline private def sparkLower(s: String): String =
     UTF8String.fromString(s).toLowerCase.toString
 
-  /** `regexp_replace(h, ":[0-9]+$", "")`: strip after the last ':' iff
-    * that suffix is nonempty all-ASCII-digits. */
+  /** `regexp_replace(h, ":[0-9]+$", "")`: strip the ':' and digits that
+    * end at the [[dollarEnd]] boundary iff there is at least one digit;
+    * a final line terminator stays. */
   def stripAnyPort(h: String): String = {
-    val n = h.length
-    var i = n - 1
-    var digits = 0
-    while (i >= 0 && h.charAt(i) >= '0' && h.charAt(i) <= '9') { i -= 1; digits += 1 }
-    if (digits > 0 && i >= 0 && h.charAt(i) == ':') h.substring(0, i) else h
+    val e = dollarEnd(h)
+    var i = e - 1
+    while (i >= 0 && h.charAt(i) >= '0' && h.charAt(i) <= '9') i -= 1
+    if (i < e - 1 && i >= 0 && h.charAt(i) == ':') h.substring(0, i) + h.substring(e)
+    else h
+  }
+
+  /** `regexp_replace(h, suffix + "$", "")` for a literal `suffix` that
+    * contains no line terminator. */
+  private def stripSuffixAtEnd(h: String, suffix: String): String = {
+    val e = dollarEnd(h)
+    val b = e - suffix.length
+    if (b >= 0 && h.startsWith(suffix, b)) h.substring(0, b) + h.substring(e) else h
   }
 
   /** Query params sorted bytewise (split '&', drop empties, UTF8-binary
@@ -129,10 +144,8 @@ object UrlScan {
     val rawHost = sparkLower(u.substring(se + 3, authEnd))
     if (rawHost.isEmpty) return null
     val host =
-      if (scheme == "http" && rawHost.endsWith(":80"))
-        rawHost.substring(0, rawHost.length - 3)
-      else if (scheme == "https" && rawHost.endsWith(":443"))
-        rawHost.substring(0, rawHost.length - 4)
+      if (scheme == "http") stripSuffixAtEnd(rawHost, ":80")
+      else if (scheme == "https") stripSuffixAtEnd(rawHost, ":443")
       else rawHost
     val pathEnd = upTo(u, authEnd, "?#")
     val path = if (pathEnd == authEnd) "/" else u.substring(authEnd, pathEnd)

@@ -103,6 +103,10 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   // record); the log is the index. Iceberg's metadata-log chain, at
   // commit-epoch granularity.
   //
+  // The log and the table marker are the sink's only metadata: write()
+  // creates the log, then the marker, before a table's first commit, so
+  // every table with commits has both, and every read resolves from them.
+  //
   // Crash consistency (single-writer contract, same as the marker):
   //  - entry append = atomic replace of the tail segment (visible
   //    immediately, head unchanged); segment roll = write new segment,
@@ -114,9 +118,12 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   //    between snapshot publish and truncation leaves the log serving
   //    the (still fully intact) pre-compaction view, and the compaction
   //    retry completes the truncation.
-  //  - tables that predate the log (no head file) fall back to the
-  //    listing path on read; the next write() migrates them by seeding
-  //    the log from one full listing.
+  //  - on stores whose rename refuses to overwrite, writeAtomic deletes
+  //    the destination before renaming its temp file onto it; a crash
+  //    between the two leaves the destination missing beside a complete
+  //    `.<name>.tmp`. readMeta() reads that temp file in the
+  //    destination's place, so the head, a segment or the marker is
+  //    never lost to that window.
   // Old segments are deleted by gcUnreferenced(), alongside the data
   // dirs they index, once no reader can hold the old head.
 
@@ -134,27 +141,47 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   private def indexEntry(body: String): String =
     oneLine(body).replaceAll(""""files":\s*\[[^\]]*\]""", """"files": []""")
 
+  private def tmpOf(dest: Path): Path = new Path(manifestDir, "." + dest.getName + ".tmp")
+
+  /** Contents of a small metadata file (log head, log segment, table
+    * marker), or None when it does not exist. A missing file whose
+    * complete `.<name>.tmp` survives — the crash window of writeAtomic's
+    * delete-then-rename branch — reads as that temp file. The
+    * destination is tried once more last, in case a concurrent rename
+    * landed between the first two tries. */
+  private def readMeta(f: FileSystem, p: Path): Option[String] = {
+    def attempt(q: Path): Option[String] =
+      try Some(readManifestJson(f, q))
+      catch { case _: java.io.FileNotFoundException => None }
+    attempt(p).orElse(attempt(tmpOf(p)).filter(parsesCompletely)).orElse(attempt(p))
+  }
+
+  /** Non-empty and whole JSON values up to its end — a temp file cut
+    * short by a crash mid-write fails. */
+  private def parsesCompletely(body: String): Boolean = body.trim.nonEmpty && {
+    val p = new com.fasterxml.jackson.core.JsonFactory().createParser(body)
+    try { while (p.nextToken() != null) {}; true }
+    catch { case _: java.io.IOException => false }
+    finally p.close()
+  }
+
   private def readLogHead(f: FileSystem): Option[(Long, Long)] =
-    if (!f.exists(logHead)) None
-    else {
-      val js = readManifestJson(f, logHead)
-      for {
-        a <- """"first_seg":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
-        b <- """"last_seg":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
-      } yield (a, b)
+    readMeta(f, logHead).map { js =>
+      def field(k: String): Long = s""""$k":\\s*(\\d+)""".r.findFirstMatchIn(js)
+        .map(_.group(1).toLong)
+        .getOrElse(throw new IllegalStateException(s"malformed commit log head $logHead: $js"))
+      (field("first_seg"), field("last_seg"))
     }
 
   /** Atomic small-file replace (write-temp + same-dir rename). The
     * rename goes ONTO the existing destination first — an atomic replace
     * on POSIX/HDFS, so a crash at any point leaves either the old or the
     * new content, never neither. Only if the FS refuses to clobber
-    * (strict no-overwrite semantics) does it fall back to delete+rename,
-    * accepting a narrow non-atomic window on those platforms alone —
-    * delete-FIRST here would erase the tail log segment (and with it up
-    * to a segment's worth of committed epochs from every log-backed
-    * read) on a crash between the two calls. */
+    * (strict no-overwrite semantics) does it fall back to delete+rename;
+    * a crash between those two calls leaves the complete temp file,
+    * which readMeta() serves until the next replace. */
   private def writeAtomic(f: FileSystem, dest: Path, body: String): Unit = {
-    val tmp = new Path(manifestDir, "." + dest.getName + ".tmp")
+    val tmp = tmpOf(dest)
     val out = f.create(tmp, true)
     try out.write(body.getBytes(UTF_8)) finally out.close()
     if (!f.rename(tmp, dest)) {
@@ -166,75 +193,91 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   private def writeLogHead(f: FileSystem, first: Long, last: Long): Unit =
     writeAtomic(f, logHead, s"""{"first_seg": $first, "last_seg": $last}""")
 
-  /** All log records in commit order; None when the table predates the
-    * log (caller falls back to listing). */
-  private def readLog(f: FileSystem): Option[Seq[String]] =
-    readLogHead(f).map { case (first, last) =>
-      (first to last).flatMap { n =>
-        val p = logSeg(n)
-        if (!f.exists(p)) Seq.empty[String]
-        else readManifestJson(f, p).split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
-      }
-    }
+  /** One segment's records. The head points only at written segments,
+    * so a missing one is lost metadata — refused, never read as empty. */
+  private def segLines(f: FileSystem, n: Long): Seq[String] =
+    readMeta(f, logSeg(n))
+      .getOrElse(throw new IllegalStateException(s"commit log segment ${logSeg(n)} is missing"))
+      .split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
+
+  /** The whole commit log, read once: head, then every live segment. A
+    * table without a head has no commits yet (an empty view). */
+  private def readLog(f: FileSystem): LogView = {
+    val head = readLogHead(f)
+    new LogView(head, head.toSeq.flatMap { case (first, last) =>
+      (first to last).flatMap(segLines(f, _))
+    })
+  }
 
   private def epochOfEntry(js: String): Option[Long] =
     """"epoch":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
   private def compactHiOfEntry(js: String): Option[Long] =
     """"compact_hi":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
 
-  // derivations over ONE in-memory entry list, so a public operation can
-  // read the log once and compute everything from it (read() does)
-  private def hiFromEntries(entries: Seq[String]): Option[Long] =
-    entries.flatMap(compactHiOfEntry).maxOption
-  private def epochsFromEntries(entries: Seq[String]): Seq[Long] =
-    entries.flatMap(epochOfEntry).distinct.sorted
-  private def bucketSnapsFromEntries(entries: Seq[String]): Seq[(Long, Long)] = {
-    val ghi = hiFromEntries(entries).getOrElse(-1L)
-    entries.flatMap(bucketCompactOfEntry).filter(_._2 > ghi).groupBy(_._1)
-      .map { case (n, xs) => n -> xs.map(_._2).max }.toSeq.sortBy(_._1)
-  }
-  private def bodiesFromEntries(f: FileSystem, entries: Seq[String],
-      srcs: Seq[(String, Path)]): Seq[String] = {
-    val byName: Map[String, String] = entries.flatMap { e =>
+  private def epochSrc(e: Long): (String, Path) =
+    (s"$tableDir/data/epoch=$e", epochManifest(e))
+  private def snapSrc(h: Long): (String, Path) =
+    (s"$tableDir/data/compact-$h", compactManifest(h))
+  private def bsnapSrc(n: Long, h: Long): (String, Path) =
+    (bcompactData(h, n), bcompactManifest(h, n))
+
+  /** Everything a public operation needs, derived from ONE read of the
+    * log: the compaction horizon, the epoch ids, the active bucket
+    * snapshots and every manifest body (bucket counts, time envelopes,
+    * schema fingerprints). Sources are (dataPath, manifestPath) pairs;
+    * the manifest path names the record, the body comes from the log. */
+  private final class LogView(val head: Option[(Long, Long)], val entries: Seq[String]) {
+    val hi: Option[Long] = entries.flatMap(compactHiOfEntry).maxOption
+    val epochs: Seq[Long] = entries.flatMap(epochOfEntry).distinct.sorted
+
+    /** The newest snapshot plus every epoch committed after it. */
+    def current: Seq[(String, Path)] =
+      hi.map(snapSrc).toSeq ++ epochs.filter(e => hi.forall(e > _)).map(epochSrc)
+
+    /** Active bucket snapshots (newest per bucket, above the global
+      * compaction horizon): Seq of (bucket, hi). */
+    lazy val bucketSnaps: Seq[(Long, Long)] = {
+      val ghi = hi.getOrElse(-1L)
+      entries.flatMap(bucketCompactOfEntry).filter(_._2 > ghi).groupBy(_._1)
+        .map { case (n, xs) => n -> xs.map(_._2).max }.toSeq.sortBy(_._1)
+    }
+
+    private lazy val bodies: Map[String, String] = entries.flatMap { e =>
       // order matters: a bucket-snapshot record also carries keys of its
       // own kind — probe it FIRST
       bucketCompactOfEntry(e).map { case (n, h) => bcompactManifest(h, n).getName -> e }
         .orElse(epochOfEntry(e).map(id => epochManifest(id).getName -> e))
         .orElse(compactHiOfEntry(e).map(h => compactManifest(h).getName -> e))
     }.toMap
-    srcs.map { case (_, m) => byName.getOrElse(m.getName, readManifestJson(f, m)) }
+
+    /** The logged record of the manifest `m`. */
+    def body(m: Path): String = bodies.getOrElse(m.getName,
+      throw new IllegalStateException(s"commit log of $tableDir has no record for ${m.getName}"))
   }
 
-  /** One-time migration: seed the log from a full `_manifest` listing
-    * (the last listing this table's readers will ever need). Segments
-    * land before the head — the head publish makes the log visible. */
-  private def ensureLog(f: FileSystem): Unit = {
-    if (f.exists(logHead)) return
-    val entries =
-      compactHiListing(f).map(h => readManifestJson(f, compactManifest(h))).toSeq ++
-        committedEpochsListing(f).map(e => readManifestJson(f, epochManifest(e)))
-    val groups =
-      if (entries.isEmpty) Seq(Seq.empty[String]) else entries.grouped(logSegCap).toSeq
-    groups.zipWithIndex.foreach { case (g, i) =>
-      writeAtomic(f, logSeg(i.toLong), g.map(indexEntry).mkString("\n"))
-    }
-    writeLogHead(f, 0L, (groups.size - 1).toLong)
+  /** The log head, initializing a fresh table's log first: an empty
+    * first segment, then the head that makes it visible. write() creates
+    * the log before the marker, so a marker without a head means the log
+    * was lost — refused: an empty log would hide every committed epoch
+    * from readers and from gcUnreferenced()'s live set. */
+  private def ensureLog(f: FileSystem): (Long, Long) = readLogHead(f).getOrElse {
+    if (readMeta(f, tableMeta).isDefined)
+      throw new IllegalStateException(
+        s"table $tableDir has a table marker but no commit log head ($logHead)")
+    writeAtomic(f, logSeg(0L), "")
+    writeLogHead(f, 0L, 0L)
+    (0L, 0L)
   }
 
   /** Append one commit record; rolls to a fresh segment at the cap. */
   private def logAppend(f: FileSystem, body: String): Unit = {
-    val (first, last) = readLogHead(f).getOrElse {
-      ensureLog(f); readLogHead(f).get
-    }
-    val segPath = logSeg(last)
-    val cur =
-      if (!f.exists(segPath)) Seq.empty[String]
-      else readManifestJson(f, segPath).split('\n').toSeq.map(_.trim).filter(_.nonEmpty)
+    val (first, last) = ensureLog(f)
+    val cur = segLines(f, last)
     if (cur.size >= logSegCap) {
       writeAtomic(f, logSeg(last + 1), indexEntry(body))
       writeLogHead(f, first, last + 1)
     } else {
-      writeAtomic(f, segPath, (cur :+ indexEntry(body)).mkString("\n"))
+      writeAtomic(f, logSeg(last), (cur :+ indexEntry(body)).mkString("\n"))
     }
   }
 
@@ -242,9 +285,8 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     * append left an epoch committed but unindexed — append it now (the
     * streaming engine replays exactly that batch on restart). */
   private def logRepair(f: FileSystem, batchId: Long): Unit = {
-    val entries = readLog(f).getOrElse(return) // legacy: listing sees it
-    if (batchId <= entries.flatMap(compactHiOfEntry).maxOption.getOrElse(-1L)) return
-    if (entries.exists(e => epochOfEntry(e).contains(batchId))) return
+    val v = readLog(f)
+    if (batchId <= v.hi.getOrElse(-1L) || v.epochs.contains(batchId)) return
     val m = epochManifest(batchId)
     if (f.exists(m)) logAppend(f, readManifestJson(f, m))
   }
@@ -255,20 +297,12 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     * compact() itself). Old segments stay on disk for in-flight readers
     * until gcUnreferenced(). */
   private def logTruncateTo(f: FileSystem, body: String, hi: Long): Unit = {
-    val keep = readLog(f).getOrElse(Nil)
-      .filter(e => epochOfEntry(e).exists(_ > hi))
-    val next = readLogHead(f).map(_._2 + 1).getOrElse(0L)
+    val v = readLog(f)
+    val keep = v.entries.filter(e => epochOfEntry(e).exists(_ > hi))
+    val next = v.head.map(_._2 + 1).getOrElse(0L)
     writeAtomic(f, logSeg(next), (indexEntry(body) +: keep).mkString("\n"))
     writeLogHead(f, next, next)
   }
-
-  /** Manifest bodies for `srcs`, served from the commit log when present
-    * (bounded reads) instead of opening one JSON per source. */
-  private def manifestBodies(f: FileSystem, srcs: Seq[(String, Path)]): Seq[String] =
-    readLog(f) match {
-      case Some(entries) => bodiesFromEntries(f, entries, srcs)
-      case None => srcs.map { case (_, m) => readManifestJson(f, m) }
-    }
   // --------------------------------------------------------------------
 
   /** Driver-side FS handle for the table's scheme (foreachBatch runs on
@@ -282,7 +316,7 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
 
   // compactHi changes only when compact() publishes a snapshot; caching it
   // keeps committed() at one O(1) exists() probe per micro-batch instead of
-  // a full _manifest listing (O(epochs) per batch on an object store).
+  // a full log read per batch.
   // null = never loaded. Single-maintainer assumption: if ANOTHER process
   // compacts while this writer streams, call refreshCompactHi() (but
   // concurrent external compaction against a live writer is out of
@@ -302,41 +336,13 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   def committed(batchId: Long): Boolean =
     batchId <= compactHiCached().getOrElse(-1L) || fs().exists(epochManifest(batchId))
 
-  /** Committed epoch ids — from the commit log when the table has one
-    * (bounded reads, no `_manifest` listing), else by listing. */
-  def committedEpochs(): Seq[Long] = {
-    val f = fs()
-    readLog(f) match {
-      case Some(entries) => epochsFromEntries(entries)
-      case None => committedEpochsListing(f)
-    }
-  }
-
-  private def committedEpochsListing(f: FileSystem): Seq[Long] =
-    if (!f.exists(manifestDir)) Nil
-    else f.listStatus(manifestDir).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("epoch-") && s.endsWith(".json") =>
-        s.stripPrefix("epoch-").stripSuffix(".json").toLong }
-      .sorted
+  /** Committed epoch ids, from the commit log (bounded reads, no
+    * `_manifest` listing). */
+  def committedEpochs(): Seq[Long] = readLog(fs()).epochs
 
   /** Highest epoch covered by a compacted snapshot, if any — log-backed
     * like [[committedEpochs]]. */
-  def compactHi(): Option[Long] = {
-    val f = fs()
-    readLog(f) match {
-      case Some(entries) => hiFromEntries(entries)
-      case None => compactHiListing(f)
-    }
-  }
-
-  private def compactHiListing(f: FileSystem): Option[Long] =
-    if (!f.exists(manifestDir)) None
-    else f.listStatus(manifestDir).toSeq
-      .map(_.getPath.getName)
-      .collect { case s if s.startsWith("compact-") && s.endsWith(".json") =>
-        s.stripPrefix("compact-").stripSuffix(".json").toLong }
-      .sorted.lastOption
+  def compactHi(): Option[Long] = readLog(fs()).hi
 
   /** The foreachBatch function. Safe under re-delivery of any batchId. */
   def write(df: DataFrame, batchId: Long): Unit = {
@@ -351,11 +357,7 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     // (The marker MUTATION happens after the data write below — a failed
     // write must not poison the sticky evolved flag with a schema that
     // never committed.)
-    locally {
-      val f0 = fs()
-      if (f0.exists(tableMeta)) requireLayoutMatch(readManifestJson(f0, tableMeta))
-      else requireInferredLayoutMatch(f0)
-    }
+    readMeta(fs(), tableMeta).foreach(requireLayoutMatch)
     val dataPath = s"$tableDir/data/epoch=$batchId"
     // persist so the count and the write share one computation of the
     // micro-batch plan (foreachBatch re-executes the plan per action)
@@ -409,8 +411,8 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
       } finally df.unpersist() // never pin the micro-batch across a retry
     val f = fs()
     f.mkdirs(manifestDir)
-    // migrate a pre-log table BEFORE this commit's rename, so the seed
-    // listing cannot double-count the epoch being committed right now
+    // a fresh table gets its commit log, then its marker, before its
+    // first commit publishes — every table with commits has both
     ensureLog(f)
     // marker mutation after the data landed, before the commit publishes
     updateTableMeta(f, ExactlyOnceSink.schemaMd5(df.schema))
@@ -503,7 +505,7 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   //  (b) readers decide plain-vs-mergeSchema from ONE small file instead
   //      of O(epochs) manifest round-trips per read.
   // Single-writer assumption (same as compact()): the marker is rewritten
-  // by write()/compact() only.
+  // by write()/gcUnreferenced() only.
 
   private def tableMeta: Path = new Path(manifestDir, "table.json")
 
@@ -531,87 +533,27 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
           "use the layout the table was created with")
   }
 
-  private def hasBucketsKey(json: String): Boolean =
-    """"buckets":\s*\{""".r.findFirstMatchIn(json).isDefined
-
-  /** Layout guard for MARKERless tables that already have commits (written
-    * before the marker existed, or whose marker was lost mid-replace): the
-    * manifests carry a `buckets` key iff the writer was bucketed, and the
-    * shadow dirs carry the column name — infer the layout from them and
-    * refuse a mismatched open. Without this, the first write of a
-    * differently-configured sink would stamp the marker with ITS layout
-    * and every historical flat epoch would silently vanish from bucketed
-    * reads (zero shadow subdirs ⇒ zero paths contributed, no error). */
-  private def requireInferredLayoutMatch(f: FileSystem): Unit = {
-    val srcs = currentSrcs()
-    if (srcs.isEmpty) return // fresh table: this sink defines the layout
-    val bucketed = manifestBodies(f, srcs).exists(hasBucketsKey)
-    if (bucketed != bucketCol.isDefined)
-      throw new IllegalStateException(
-        s"table $tableDir has committed ${if (bucketed) "bucketed" else "flat"} epochs " +
-          s"(and no table marker) but was opened with bucketCol=$bucketCol — a " +
-          "mismatched layout would silently mis-read; use the layout the table " +
-          "was created with")
-    // bucketed on both sides: verify the column NAME where shadow dirs reveal
-    // it (all-empty epochs leave none — then the name is genuinely unknowable)
-    for (b <- bucketCol) {
-      val recorded = srcs.map(x => new Path(x._1)).filter(f.exists)
-        .flatMap(dp => f.listStatus(dp).toSeq.map(_.getPath.getName))
-        .collectFirst { case n if n.startsWith("__") && n.contains("=") =>
-          n.stripPrefix("__").takeWhile(_ != '=') }
-      for (r <- recorded if r != b)
-        throw new IllegalStateException(
-          s"table $tableDir routes on '__$r=' directories but was opened with " +
-            s"bucketCol=Some($b) — use the column the table was created with")
-    }
-  }
-
   /** Maintain the marker on commit: validate layout, flip `evolved` when
-    * the schema fingerprint changes. Returns nothing; throws on layout
-    * mismatch BEFORE any data is written. */
-  private def updateTableMeta(f: FileSystem, md5: String): Unit = {
-    if (f.exists(tableMeta)) {
-      val js = readManifestJson(f, tableMeta)
-      requireLayoutMatch(js)
-      val prev = schemaMd5Of(js)
-      if (!prev.contains(md5)) writeTableMeta(f, md5, evolved = true, bucketCol)
-    } else {
-      // seeding a marker over a table that already has commits (markerless
-      // legacy): derive `evolved` from the EXISTING fingerprints, not from
-      // this commit alone — stamping evolved=false over mixed-schema
-      // history would send readers down the plain (first-file-schema) path
-      val prior = currentSrcs().map { case (_, m) => schemaMd5Of(readManifestJson(f, m)) }
-      writeTableMeta(f, md5, evolved = prior.exists(p => !p.contains(md5)), bucketCol)
+    * the schema fingerprint changes. A fresh table's first commit writes
+    * it: this sink's layout, not evolved. */
+  private def updateTableMeta(f: FileSystem, md5: String): Unit =
+    readMeta(f, tableMeta) match {
+      case Some(js) =>
+        requireLayoutMatch(js)
+        if (!schemaMd5Of(js).contains(md5)) writeTableMeta(f, md5, evolved = true, bucketCol)
+      case None => writeTableMeta(f, md5, evolved = false, bucketCol)
     }
-  }
 
   /** Reader-side: validate layout and decide mergeSchema from the marker
-    * (one small read). `None` = no marker (legacy table, or the writer is
-    * mid-replace) — the caller falls back to comparing the per-manifest
-    * fingerprints of exactly the sources it is about to read, which is
-    * slower but always correct (a plain multi-path parquet read silently
-    * adopts the first file's schema, so guessing "plain" is never safe
-    * for a table that might have evolved). */
-  private def readerEvolved(f: FileSystem): Option[Boolean] = {
-    if (!f.exists(tableMeta)) {
-      // markerless table: the READ side gets the same inferred-layout
-      // guard as write() — a flat open of a bucketed markerless table
-      // would otherwise return epoch roots AND bucket-snapshot dirs
-      // (every covered row twice), the exact silent mis-read the guard
-      // exists to prevent
-      requireInferredLayoutMatch(f)
-      return None
-    }
-    val js = readManifestJson(f, tableMeta)
+    * (one small read). Only called for tables with commits, which always
+    * have a marker — a missing one is lost metadata and fails loudly (a
+    * plain multi-path parquet read silently adopts the first file's
+    * schema, so guessing "not evolved" is never safe). */
+  private def readerEvolved(f: FileSystem): Boolean = {
+    val js = readMeta(f, tableMeta).getOrElse(throw new IllegalStateException(
+      s"table $tableDir has commits but no table marker ($tableMeta)"))
     requireLayoutMatch(js)
-    Some(evolvedOf(js))
-  }
-
-  /** Fallback merge decision for markerless reads: mixed (or missing)
-    * per-manifest fingerprints ⇒ mergeSchema. */
-  private def mixedFingerprintsOf(jsons: Seq[String]): Boolean = {
-    val md5s = jsons.map(schemaMd5Of)
-    !(md5s.forall(_.isDefined) && md5s.flatten.distinct.size <= 1)
+    evolvedOf(js)
   }
 
   // --------------------------------------------------------------------
@@ -646,24 +588,6 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
       n <- """"bucket":\s*(-?\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
     } yield (n, h)
 
-  /** Active bucket snapshots (newest per bucket, above the global
-    * compaction horizon): Seq of (bucket, hi). */
-  private def bucketSnaps(f: FileSystem): Seq[(Long, Long)] = readLog(f) match {
-    case Some(entries) => bucketSnapsFromEntries(entries)
-    case None =>
-      val ghi = compactHiListing(f).getOrElse(-1L)
-      val all: Seq[(Long, Long)] =
-        if (!f.exists(manifestDir)) Nil
-        else f.listStatus(manifestDir).toSeq.map(_.getPath.getName).flatMap {
-          case s if s.startsWith("bcompact-") && s.endsWith(".json") =>
-            """bcompact-(\d+)-(-?\d+)\.json""".r.findFirstMatchIn(s)
-              .map(m => (m.group(2).toLong, m.group(1).toLong))
-          case _ => None
-        }
-      all.filter(_._2 > ghi).groupBy(_._1)
-        .map { case (n, xs) => n -> xs.map(_._2).max }.toSeq.sortBy(_._1)
-  }
-
   /**
    * Incrementally compact a RANGE of buckets (bucketed sinks only): for
    * each bucket, fold its previous bucket snapshot (if any) plus its
@@ -680,35 +604,29 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     val bn = bucketCol.getOrElse(throw new IllegalArgumentException(
       s"bucket compaction requires a bucketed sink (bucketCol=None in $tableDir)"))
     val f = fs()
-    if (f.exists(tableMeta)) requireLayoutMatch(readManifestJson(f, tableMeta))
-    val ghi = compactHi()
-    val epochs = committedEpochs().filter(e => ghi.forall(e > _))
+    val marker = readMeta(f, tableMeta)
+    marker.foreach(requireLayoutMatch)
+    val v = readLog(f)
+    val epochs = v.epochs.filter(e => v.hi.forall(e > _))
     if (epochs.isEmpty) return
     val hi = epochs.max
-    val prev = bucketSnaps(f).toMap
-    val esrcs = epochs.map(e => (s"$tableDir/data/epoch=$e", epochManifest(e)))
-    val jsons = manifestBodies(f, esrcs)
-    val merge = readerEvolved(f).getOrElse(mixedFingerprintsOf(jsons))
-    // one log pass for every previous snapshot's body, not one per bucket
-    val prevBodies: Map[Long, String] = {
-      val prevSeq = prev.toSeq
-      val ps = prevSeq.map { case (n, h) => (bcompactData(h, n), bcompactManifest(h, n)) }
-      prevSeq.map(_._1).zip(manifestBodies(f, ps)).toMap
-    }
+    val prev = v.bucketSnaps.toMap
+    val jsons = epochs.map(e => v.body(epochManifest(e)))
+    // a table with commits has a marker (see write())
+    val merge = marker.exists(evolvedOf)
     for (n <- buckets; if !prev.get(n).contains(hi)) {
       val phi = prev.get(n)
       // only epochs after the previous bucket snapshot, only with rows
       val cover = epochs.zip(jsons).filter { case (e, _) => phi.forall(e > _) }
       val withRows = cover.filter { case (_, js) => bucketRowsOf(js).getOrElse(n, 0L) > 0L }
-      val prevSrc = phi.map(h => (bcompactData(h, n), bcompactManifest(h, n)))
-      val paths = prevSrc.map(_._1).toSeq ++
+      val paths = phi.map(h => bcompactData(h, n)).toSeq ++
         withRows.map { case (e, _) => s"$tableDir/data/epoch=$e/${shadowCol(bn)}=$n" }
       if (paths.nonEmpty) {
         val dataPath = bcompactData(hi, n)
         val src = readPaths(spark, paths, merge)
         src.coalesce(targetPartitions).write.mode(SaveMode.Overwrite).parquet(dataPath)
         // metadata folded from the captured records — no second data scan
-        val prevJson = phi.map(_ => prevBodies(n))
+        val prevJson = phi.map(h => v.body(bcompactManifest(h, n)))
         val rows = prevJson.map(bucketRowsOf(_).getOrElse(n, 0L)).getOrElse(0L) +
           withRows.map { case (_, js) => bucketRowsOf(js).getOrElse(n, 0L) }.sum
         // conservative envelope (per-epoch stats span ALL buckets): still
@@ -732,14 +650,6 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     }
   }
   // --------------------------------------------------------------------
-
-  /** (dataPath, manifestPath) for the current committed view. */
-  private def currentSrcs(): Seq[(String, Path)] = {
-    val hi = compactHi()
-    val epochs = committedEpochs().filter(e => hi.forall(e > _))
-    hi.map(h => (s"$tableDir/data/compact-$h", compactManifest(h))).toSeq ++
-      epochs.map(e => (s"$tableDir/data/epoch=$e", epochManifest(e)))
-  }
 
   private def shadowCol(b: String): String = s"__$b"
 
@@ -767,10 +677,9 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
    * result); layout validation + the plain-vs-mergeSchema decision come
    * from the table marker — one small read, not O(epochs).
    */
-  private def readSrcs(spark: SparkSession, srcs: Seq[(String, Path)]): DataFrame = {
-    val f = fs()
+  private def readSrcs(spark: SparkSession, f: FileSystem,
+      srcs: Seq[(String, Path)]): DataFrame = {
     val merge = readerEvolved(f)
-      .getOrElse(mixedFingerprintsOf(manifestBodies(f, srcs)))
     val paths = bucketCol match {
       case Some(b) => srcs.flatMap { case (dp, _) => bucketDirs(f, dp, b) }
       case None => srcs.map(_._1)
@@ -793,25 +702,24 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
    */
   def read(spark: SparkSession, bucket: Option[Long] = None,
       timeRange: Option[(Long, Long)] = None): DataFrame = {
-    // the hot path reads the commit log ONCE and derives everything —
-    // horizon, epoch list, bucket snapshots, manifest bodies — from that
-    // one entry list (a legacy table falls back to the listing helpers)
     val f = fs()
-    val logE = readLog(f)
-    val ghi = logE.map(hiFromEntries).getOrElse(compactHiListing(f))
-    val epochs = (logE.map(epochsFromEntries).getOrElse(committedEpochsListing(f)))
-      .filter(e => ghi.forall(e > _))
-    val srcs0 = ghi.map(h => (s"$tableDir/data/compact-$h", compactManifest(h))).toSeq ++
-      epochs.map(e => (s"$tableDir/data/epoch=$e", epochManifest(e)))
+    readCurrent(spark, f, readLog(f), bucket, timeRange)
+  }
+
+  /** [[read]] over an already-read log view: horizon, epoch list, bucket
+    * snapshots and manifest bodies all come from `v`. */
+  private def readCurrent(spark: SparkSession, f: FileSystem, v: LogView,
+      bucket: Option[Long], timeRange: Option[(Long, Long)]): DataFrame = {
+    val srcs0 = v.current
     if (srcs0.isEmpty)
       throw new IllegalStateException(s"no committed epochs in $tableDir")
-    val bsnaps = logE.map(bucketSnapsFromEntries).getOrElse(bucketSnaps(f))
+    val bsnaps = v.bucketSnaps
     if (bucket.isEmpty && timeRange.isEmpty && bsnaps.isEmpty)
-      return readSrcs(spark, srcs0)
+      return readSrcs(spark, f, srcs0)
     val bHi: Map[Long, Long] = bsnaps.toMap
     // bucket snapshots join the source list; the epoch slices they cover
     // are masked during path expansion below
-    val srcs = srcs0 ++ bsnaps.map { case (n, h) => (bcompactData(h, n), bcompactManifest(h, n)) }
+    val srcs = srcs0 ++ bsnaps.map { case (n, h) => bsnapSrc(n, h) }
     val sc = timeRange.map { _ =>
       statsCol.getOrElse(throw new IllegalArgumentException(
         s"time-range read requires a statsCol-configured sink ($tableDir)"))
@@ -820,12 +728,10 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
       bucketCol.getOrElse(throw new IllegalArgumentException(
         s"bucket read requires a bucketed sink (bucketCol=None in $tableDir)"))
     }
-    // ONE manifest pass: the merge decision (when the marker is absent)
-    // and both pruning dimensions — per-bucket row counts and the
-    // event-time envelope — all come from the same bodies
-    val jsons = logE.map(bodiesFromEntries(f, _, srcs))
-      .getOrElse(srcs.map { case (_, m) => readManifestJson(f, m) })
-    val merge = readerEvolved(f).getOrElse(mixedFingerprintsOf(jsons))
+    // both pruning dimensions — per-bucket row counts and the event-time
+    // envelope — come from the logged manifest bodies
+    val jsons = srcs.map { case (_, m) => v.body(m) }
+    val merge = readerEvolved(f)
     def emptyResult(): DataFrame = {
       val allPaths = (bucketCol match {
         case Some(bn) => srcs0.flatMap { case (dp, _) => bucketDirs(f, dp, bn) }
@@ -901,8 +807,8 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
    * a narrow event-time band), so a "yesterday only" query over a
    * 100 TB table touches a sliver of the epochs. The residual row filter
    * is applied on top (stats are a superset guard, not a row predicate);
-   * epochs without stats (legacy, or all-null column) are conservatively
-   * KEPT.
+   * epochs without stats (written by a sink without statsCol, or an
+   * all-null column) are conservatively KEPT.
    */
   def readTimeRange(spark: SparkSession, fromUs: Long, untilUs: Long): DataFrame =
     read(spark, bucket = None, timeRange = Some((fromUs, untilUs)))
@@ -910,16 +816,16 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   /**
    * Table observability: one row per current source (newest snapshot +
    * live epochs) with its commit metadata — the `DESCRIBE
-   * TABLE`/`snapshots()` analog, read entirely from the manifests.
+   * TABLE`/`snapshots()` analog, read entirely from the commit log.
    * Columns: source, kind, rows (null for snapshots, which record
    * n_epochs instead), schema_md5, n_buckets, min_us, max_us.
    */
   def describe(spark: SparkSession): DataFrame = {
     import spark.implicits._
-    val f = fs()
-    val srcs = currentSrcs() ++
-      bucketSnaps(f).map { case (n, h) => (bcompactData(h, n), bcompactManifest(h, n)) }
-    srcs.zip(manifestBodies(f, srcs)).map { case ((dp, _), js) =>
+    val v = readLog(fs())
+    val srcs = v.current ++ v.bucketSnaps.map { case (n, h) => bsnapSrc(n, h) }
+    srcs.map { case (dp, m) =>
+      val js = v.body(m)
       val name = new Path(dp).getName
       val rows = """"rows":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
       val st = statsOf(js)
@@ -942,17 +848,17 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
    * snapshot's hi fails loudly rather than returning merged data.
    */
   def readAsOf(spark: SparkSession, asOfEpoch: Long): DataFrame = {
-    compactHi().filter(_ > asOfEpoch).foreach { h =>
+    val f = fs()
+    val v = readLog(f)
+    v.hi.filter(_ > asOfEpoch).foreach { h =>
       throw new IllegalStateException(
         s"history up to epoch $h was compacted away; cannot read as-of $asOfEpoch")
     }
-    val epochs = committedEpochs().filter(_ <= asOfEpoch)
-    val hi = compactHi().filter(_ <= asOfEpoch)
-    val srcs = hi.map(h => (s"$tableDir/data/compact-$h", compactManifest(h))).toSeq ++
-      epochs.filter(e => hi.forall(e > _)).map(e => (s"$tableDir/data/epoch=$e", epochManifest(e)))
+    val srcs = v.hi.map(snapSrc).toSeq ++
+      v.epochs.filter(e => e <= asOfEpoch && v.hi.forall(e > _)).map(epochSrc)
     if (srcs.isEmpty)
       throw new IllegalStateException(s"no epochs committed at or before $asOfEpoch")
-    readSrcs(spark, srcs)
+    readSrcs(spark, f, srcs)
   }
 
   /**
@@ -966,27 +872,26 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
    */
   def readBetween(spark: SparkSession, afterEpoch: Long,
       untilEpoch: Long = Long.MaxValue): DataFrame = {
-    // list FIRST, check the compaction horizon AFTER: a concurrent
-    // compaction between the two calls then fails the guard instead of
-    // making the listing silently empty (manifests GC'd) — the loud
-    // failure this method promises. Data dirs survive compaction until
-    // the separate GC step, so a listing that passed the guard reads
-    // consistent data.
-    val epochs = committedEpochs().filter(e => e > afterEpoch && e <= untilEpoch)
-    compactHi().filter(_ > afterEpoch).foreach { h =>
+    // the epoch list and the compaction horizon come from ONE log read,
+    // so they describe the same commit-log state: a concurrent compaction
+    // either shows in the horizon (and fails the guard) or not at all.
+    // Data dirs survive compaction until the separate GC step, so a view
+    // that passed the guard reads consistent data.
+    val f = fs()
+    val v = readLog(f)
+    v.hi.filter(_ > afterEpoch).foreach { h =>
       throw new IllegalStateException(
         s"epochs <= $h were compacted away; incremental read after $afterEpoch is no longer exact")
     }
+    val epochs = v.epochs.filter(e => e > afterEpoch && e <= untilEpoch)
     if (epochs.isEmpty) {
       // caught up: zero rows with the real table schema; a table with no
       // commits at all has no schema yet — that's "producer not started",
       // not an error, so hand back an empty frame the poller can retry on
-      return if (committedEpochs().nonEmpty || compactHi().nonEmpty)
-        read(spark).limit(0)
+      return if (v.current.nonEmpty) readCurrent(spark, f, v, None, None).limit(0)
       else spark.emptyDataFrame
     }
-    val srcs = epochs.map(e => (s"$tableDir/data/epoch=$e", epochManifest(e)))
-    readSrcs(spark, srcs)
+    readSrcs(spark, f, epochs.map(epochSrc))
   }
 
   /**
@@ -997,7 +902,8 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
    * day), and scan cost is dominated by file count.
    *
    * Protocol (same atomic-publish discipline as `write`):
-   *   1. rewrite the current `read()` view to `data/compact-<hi>`;
+   *   1. rewrite the captured epochs (plus the previous snapshot) to
+   *      `data/compact-<hi>`;
    *   2. publish `compact-<hi>.json` atomically (one rename — readers
    *      see the old epochs or the snapshot, never a mix);
    *   3. GC the superseded manifests (covered epochs + older compacts).
@@ -1011,24 +917,29 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
    */
   def compact(spark: SparkSession, targetPartitions: Int = 8): Unit = {
     val f = fs()
+    // the capture: EXACTLY these epochs are folded below. The horizon and
+    // the manifest bodies come from one log read taken after it, which
+    // holds every captured epoch's record (records leave the log only
+    // through compaction, which has a single maintainer)
     val epochs = committedEpochs()
-    val prevHi = compactHi()
+    val v = readLog(f)
+    val prevHi = v.hi
     if (epochs.isEmpty || (epochs.size < 2 && prevHi.isEmpty)) return
     val hi = epochs.max
     val dataPath = s"$tableDir/data/compact-$hi"
-    // rewrite EXACTLY the captured epoch set — not read(), which re-lists
-    // the manifest dir and would fold an epoch committed concurrently
-    // (> hi) into the snapshot while its own manifest survives the GC
-    // below, permanently duplicating its rows
-    val srcs = prevHi.map(h => (s"$tableDir/data/compact-$h", compactManifest(h))).toSeq ++
-      epochs.filter(e => prevHi.forall(e > _)).map(e => (s"$tableDir/data/epoch=$e", epochManifest(e)))
+    // rewrite EXACTLY the captured epoch set — not read(), which would
+    // fold an epoch committed concurrently (> hi) into the snapshot while
+    // its own manifest survives the GC below, permanently duplicating
+    // its rows
+    val srcs = prevHi.map(snapSrc).toSeq ++
+      epochs.filter(e => prevHi.forall(e > _)).map(epochSrc)
     // bucket counts / stats envelopes come from the captured manifests —
     // ALWAYS read: a compactor instance constructed without statsCol must
     // still carry the envelopes forward (the per-epoch manifests are GC'd
     // below; dropping the stats here would permanently disable time-range
     // pruning for the whole table)
-    val jsons = manifestBodies(f, srcs)
-    val src = readSrcs(spark, srcs)
+    val jsons = srcs.map { case (_, m) => v.body(m) }
+    val src = readSrcs(spark, f, srcs)
     bucketCol match {
       case Some(b) =>
         // keep the pruned layout: cluster by bucket so each bucket's rows
@@ -1081,21 +992,21 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     logTruncateTo(f, body, hi)
     // NOTE: the evolved flag is NOT reset here even though the snapshot
     // unified the schema — in-flight readers may still hold pre-compaction
-    // source listings (their data dirs survive until GC by design) and a
+    // source lists (their data dirs survive until GC by design) and a
     // premature plain-read decision would mis-read them. The reset happens
     // in gcUnreferenced(), which by contract runs only once no reader can
-    // hold the old listing.
+    // hold the old source list.
     // GC superseded manifests (data dirs retained for in-flight readers)
     epochs.filter(_ <= hi).foreach(e => f.delete(epochManifest(e), false))
-    prevHi.foreach(h => f.delete(new Path(manifestDir, f"compact-$h%010d.json"), false))
+    prevHi.foreach(h => f.delete(compactManifest(h), false))
   }
 
   /**
    * Delete data directories no longer referenced by any manifest entry
    * (epoch dirs folded into a snapshot, superseded snapshots). Run this
-   * once no reader can still hold a pre-compaction manifest listing —
-   * the grace period is operational (e.g. max query runtime), which is
-   * why GC is a separate explicit step and not part of [[compact]].
+   * once no reader can still hold a pre-compaction source list — the
+   * grace period is operational (e.g. max query runtime), which is why
+   * GC is a separate explicit step and not part of [[compact]].
    * Returns the number of directories removed.
    */
   def gcUnreferenced(): Int = {
@@ -1107,12 +1018,12 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     // published) — deleting it would let write()/compact() publish a
     // manifest pointing at deleted files. Anything at or below a captured
     // horizon that is still unreferenced is genuinely superseded.
-    val epochs = committedEpochs()
-    val maxEpoch = epochs.lastOption.getOrElse(compactHi().getOrElse(-1L))
-    val hi = compactHi()
-    val activeB = bucketSnaps(f).toMap
+    val v = readLog(f)
+    val hi = v.hi
+    val maxEpoch = v.epochs.lastOption.getOrElse(hi.getOrElse(-1L))
+    val activeB = v.bucketSnaps.toMap
     val live: Set[String] =
-      epochs.map(e => s"epoch=$e").toSet ++ hi.map(h => s"compact-$h").toSet ++
+      v.epochs.map(e => s"epoch=$e").toSet ++ hi.map(h => s"compact-$h").toSet ++
         activeB.map { case (n, h) => new Path(bcompactData(h, n)).getName }
     def superseded(name: String): Boolean = name match {
       case s if s.startsWith("epoch=") =>
@@ -1126,50 +1037,40 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
         s.stripPrefix("compact-").toLongOption.exists(c => hi.exists(c < _))
       case _ => false // unknown layout: never delete
     }
+    // no reader can hold a pre-compaction source list anymore (that is
+    // this method's calling contract), so if every CURRENT manifest shares
+    // one schema fingerprint the sticky evolved flag can finally reset and
+    // future reads go back to the plain (no-mergeSchema) path
+    val md5s = v.current.map { case (_, m) => schemaMd5Of(v.body(m)) }
+    if (md5s.nonEmpty && md5s.forall(_.isDefined) && md5s.flatten.distinct.size == 1) {
+      // carry the RECORDED layout forward verbatim: maintenance is
+      // documented to run from a plain `new ExactlyOnceSink(dir)`, and
+      // substituting that instance's bucketCol here would reset a
+      // bucketed table's marker to flat — every correctly-configured
+      // reader would then fail the layout guard (and a flat one would
+      // pass it against bucketed data)
+      readMeta(f, tableMeta).foreach { js =>
+        writeTableMeta(f, md5s.head.get, evolved = false, bucketColOf(js))
+      }
+    }
     val victims = f.listStatus(dataDir).toSeq
       .map(_.getPath)
       .filter(p => !live.contains(p.getName) && superseded(p.getName))
     victims.foreach(p => f.delete(p, true))
-    // no reader can hold a pre-compaction listing anymore (that is this
-    // method's calling contract), so if every CURRENT manifest shares one
-    // schema fingerprint the sticky evolved flag can finally reset and
-    // future reads go back to the plain (no-mergeSchema) path
-    val current = compactHi().map(compactManifest).toSeq ++
-      committedEpochs().filter(e => compactHi().forall(e > _)).map(epochManifest)
-    if (current.nonEmpty && f.exists(tableMeta)) {
-      val md5s = current.map(m => schemaMd5Of(readManifestJson(f, m)))
-      if (md5s.forall(_.isDefined) && md5s.flatten.distinct.size == 1) {
-        // carry the RECORDED layout forward verbatim: maintenance is
-        // documented to run from a plain `new ExactlyOnceSink(dir)`, and
-        // substituting that instance's bucketCol here would reset a
-        // bucketed table's marker to flat — every correctly-configured
-        // reader would then fail the layout guard (and a flat one would
-        // pass it against bucketed data). A markerless table stays
-        // markerless: seeding is write()'s job, behind its layout guards.
-        val layout = bucketColOf(readManifestJson(f, tableMeta))
-        writeTableMeta(f, md5s.head.get, evolved = false, layout)
-      }
-    }
     // GC obsolete bucket-snapshot manifests (their data dirs just went,
-    // and the log no longer references them)
-    if (f.exists(manifestDir)) {
+    // and the log no longer references them) and the commit-log segments
+    // below the live head range (compaction moved first_seg past them;
+    // they only existed for in-flight readers). A table without a head
+    // has no commit log, so nothing to drop.
+    v.head.foreach { case (first, _) =>
       val activeNames = activeB.map { case (n, h) => bcompactManifest(h, n).getName }.toSet
       f.listStatus(manifestDir).toSeq.map(_.getPath)
         .filter { p =>
           val s = p.getName
-          s.startsWith("bcompact-") && s.endsWith(".json") && !activeNames.contains(s) &&
-            superseded(s.stripSuffix(".json"))
-        }
-        .foreach(p => f.delete(p, false))
-    }
-    // GC commit-log segments below the live head range (compaction moved
-    // first_seg past them; they only existed for in-flight readers)
-    readLogHead(f).foreach { case (first, _) =>
-      f.listStatus(manifestDir).toSeq.map(_.getPath)
-        .filter { p =>
-          val n = p.getName
-          n.startsWith("log-") && n.endsWith(".json") && n != logHead.getName &&
-            n.stripPrefix("log-").stripSuffix(".json").toLongOption.exists(_ < first)
+          if (s.startsWith("bcompact-") && s.endsWith(".json"))
+            !activeNames.contains(s) && superseded(s.stripSuffix(".json"))
+          else s.startsWith("log-") && s.endsWith(".json") && s != logHead.getName &&
+            s.stripPrefix("log-").stripSuffix(".json").toLongOption.exists(_ < first)
         }
         .foreach(p => f.delete(p, false))
     }

@@ -2,8 +2,7 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 import graft.model.{HostSession, TsUtil}
@@ -98,17 +97,5 @@ object Sessionize {
           }
           closed.iterator
       }
-  }
-
-  /** Column-level adapter from a page DataFrame (host, warc_ts, text). */
-  def fromPages(spark: SparkSession, pages: Dataset[_], gapUs: Long = GapUsDefault,
-      watermark: String = "2 hours"): Dataset[HostSession] = {
-    import spark.implicits._
-    val lite = pages.toDF()
-      .select(col("host"), col("warc_ts").cast("timestamp"),
-        length(col("text")).cast("long").as("text_len"))
-      .withWatermark("warc_ts", watermark)
-      .as[PageLite]
-    sessions(lite, gapUs)
   }
 }

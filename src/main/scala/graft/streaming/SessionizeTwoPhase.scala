@@ -133,7 +133,7 @@ object SessionizeTwoPhase {
       }
   }
 
-  /** Column-level adapter mirroring [[Sessionize.fromPages]]. */
+  /** Column-level adapter from a page DataFrame (host, warc_ts, text). */
   def fromPages(spark: SparkSession, pages: Dataset[_],
       gapUs: Long = Sessionize.GapUsDefault,
       watermarkDelaySec: Long = 7200L): Dataset[HostSession] = {

@@ -399,61 +399,6 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     assert(sink.readTimeRange(spark, 8000L * 1000000L, 9000L * 1000000L).count() == 0)
   }
 
-  test("markerless (legacy) evolved table still unions via the per-manifest fallback") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("eosleg").toString
-    val sink = new ExactlyOnceSink(dir)
-    sink.write(Seq((1, "a")).toDF("id", "v"), 0L)
-    sink.write(Seq((2, "b", 7L)).toDF("id", "v", "score"), 1L)
-    // simulate a table written before the marker existed
-    Files.delete(java.nio.file.Paths.get(s"$dir/_manifest/table.json"))
-    val back = sink.read(spark)
-    assert(back.columns.toSeq == Seq("id", "v", "score"))
-    val rows = back.orderBy("id").collect()
-      .map(r => (r.getInt(0), if (r.isNullAt(2)) null else r.getLong(2)))
-    assert(rows.toSeq == Seq((1, null), (2, 7L)))
-    // seeding a marker over mixed-schema history must record evolved=true:
-    // a third commit writes the marker fresh, and a stamped evolved=false
-    // would send readers down the plain first-file-schema path
-    sink.write(Seq((3, "c")).toDF("id", "v"), 2L)
-    assert(sink.read(spark).columns.toSeq == Seq("id", "v", "score"))
-  }
-
-  test("markerless table with flat epochs refuses a bucketed open (inferred layout guard)") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("eosmk1").toString
-    val flat = new ExactlyOnceSink(dir)
-    flat.write(Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "hb"), 0L)
-    Files.delete(java.nio.file.Paths.get(s"$dir/_manifest/table.json"))
-    // a bucketed sink's first write would stamp a bucketed marker and the
-    // flat epoch's rows would silently vanish from every later read
-    val bucketed = new ExactlyOnceSink(dir, bucketCol = Some("hb"))
-    intercept[IllegalStateException] {
-      bucketed.write(Seq((3, "c", 0)).toDF("id", "v", "hb"), 1L)
-    }
-    // the table is untouched: the flat sink still reads epoch 0 alone
-    assert(flat.read(spark).count() == 2)
-  }
-
-  test("markerless table with bucketed epochs refuses flat and wrong-column opens") {
-    import spark.implicits._
-    val dir = Files.createTempDirectory("eosmk2").toString
-    val sink = new ExactlyOnceSink(dir, bucketCol = Some("hb"))
-    sink.write(Seq((1, "a", 0), (2, "b", 1)).toDF("id", "v", "hb"), 0L)
-    Files.delete(java.nio.file.Paths.get(s"$dir/_manifest/table.json"))
-    intercept[IllegalStateException] {
-      new ExactlyOnceSink(dir).write(Seq((3, "c", 0)).toDF("id", "v", "hb"), 1L)
-    }
-    intercept[IllegalStateException] {
-      new ExactlyOnceSink(dir, bucketCol = Some("other"))
-        .write(Seq((3, "c", 0)).toDF("id", "v", "other"), 1L)
-    }
-    // the CORRECT layout still writes (re-seeding the marker)
-    sink.write(Seq((3, "c", 0)).toDF("id", "v", "hb"), 1L)
-    assert(sink.read(spark).count() == 3)
-    assert(sink.read(spark, bucket = Some(0L)).count() == 2)
-  }
-
   test("commit log: reads never list or open per-epoch manifests; segments roll at the cap") {
     import spark.implicits._
     val dir = Files.createTempDirectory("eoslog").toString
@@ -510,22 +455,11 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     assert(sink.committedEpochs() == Seq(8L))
   }
 
-  test("commit log: a pre-log (legacy) table is migrated by the next write and re-delivery heals a missing entry") {
+  test("commit log: re-delivery heals a missing log entry") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("eoslegmig").toString
+    val dir = Files.createTempDirectory("eosheal").toString
     val sink = new ExactlyOnceSink(dir, logSegCap = 3)
-    (0L until 5L).foreach(e => sink.write(Seq((e, s"v$e")).toDF("id", "v"), e))
-    // simulate a table written before the log existed
-    new java.io.File(s"$dir/_manifest").listFiles()
-      .filter(_.getName.startsWith("log-")).foreach(f0 => Files.delete(f0.toPath))
-    // listing fallback still serves reads
-    assert(sink.read(spark).count() == 5)
-    // the next write migrates: one seed listing, then the log is the index
-    sink.write(Seq((5L, "v5")).toDF("id", "v"), 5L)
-    assert(Files.exists(java.nio.file.Paths.get(s"$dir/_manifest/log-head.json")))
-    assert(sink.committedEpochs() == (0L until 6L))
-    assert(sink.read(spark).count() == 6)
-
+    (0L until 6L).foreach(e => sink.write(Seq((e, s"v$e")).toDF("id", "v"), e))
     // crash between manifest rename and log append, simulated by dropping
     // the tail entry: re-delivery of the same epoch repairs the index
     val segFiles = new java.io.File(s"$dir/_manifest").listFiles()
@@ -543,6 +477,33 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     // and the original epoch-5 data is untouched (the manifest was the commit)
     assert(sink.read(spark).where($"id" === 5L).select($"v").collect()
       .map(_.getString(0)).toSeq == Seq("v5"))
+  }
+
+  test("strict-rename crash: head, tail segment and marker read from their .tmp") {
+    import spark.implicits._
+    def rows(sink: ExactlyOnceSink) =
+      sink.read(spark).select($"id", $"v").as[(Long, String)].collect().sorted.toSeq
+    def expected(n: Long) = (0L until n).map(e => (e, s"v$e"))
+    // 5 entries at cap 3: segment 0 is full, the tail segment 1 holds
+    // epochs 3 and 4
+    for (name <- Seq("log-head.json", "log-0000000001.json", "table.json")) {
+      val dir = Files.createTempDirectory("eoscrash").toString
+      val sink = new ExactlyOnceSink(dir, logSegCap = 3)
+      (0L until 5L).foreach(e => sink.write(Seq((e, s"v$e")).toDF("id", "v"), e))
+      // the state a crash inside writeAtomic's delete-then-rename branch
+      // (stores whose rename refuses to overwrite) leaves: destination and
+      // its checksum sidecar gone, the complete temp file beside them
+      val m = java.nio.file.Paths.get(s"$dir/_manifest")
+      Files.move(m.resolve(name), m.resolve(s".$name.tmp"))
+      Files.deleteIfExists(m.resolve(s".$name.crc"))
+      val reader = new ExactlyOnceSink(dir, logSegCap = 3)
+      assert(reader.committedEpochs() == (0L until 5L), name)
+      assert(rows(reader) == expected(5), name)
+      reader.write(Seq((5L, "v5")).toDF("id", "v"), 5L)
+      assert(reader.committedEpochs() == (0L until 6L), name)
+      assert(rows(reader) == expected(6), name)
+      assert(rows(new ExactlyOnceSink(dir)) == expected(6), name)
+    }
   }
 
   test("per-bucket compaction: exact reads + pruning across interleaved writes, reruns, GC, and full compaction") {

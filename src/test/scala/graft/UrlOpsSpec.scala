@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.UrlOps
+import graft.operators.{LinkGraph, UrlOps}
 
 /** [[UrlOps.canonicalizeUrl]] edge cases — the q62 oracle mirrors the
   * same steps in DuckDB, so this spec pins the per-step semantics the
@@ -362,7 +362,15 @@ class UrlOpsSpec extends SparkSpec {
       "http://h/p#f1#f2", "http://h/p\n#f", "http://h/p#f\n", "http://h/p#f\r\n",
       "http://h/p#a\nb#c", "http://h\u2028#f", "http://h/#f\u2029",
       "http://h/p?B=1&b=0&%41=2&a=3", "http://\u0130stanbul.example/П",
-      "http://h/p?x=\u00e9&x=e")
+      "http://h/p?x=\u00e9&x=e") ++
+      // Java's `$` also matches before ONE final line terminator, so a
+      // port followed by a terminator is still stripped
+      (for {
+        scheme <- Seq("http", "https")
+        port <- Seq(":80", ":443", ":8080")
+        term <- Seq("\n", "\r\n", "\r", "\u0085", "\u2028", "\u2029")
+        rest <- Seq("", "/p", "#f")
+      } yield s"$scheme://h$port$term$rest")
     val rnd = new scala.util.Random(7)
     val alphabet = "aB:/@?#.019+-%_~&= \t\nwWw\r\u0085\u2028"
     val fuzz = (1 to 4000).map { _ =>
@@ -376,9 +384,11 @@ class UrlOpsSpec extends SparkSpec {
       UrlOps.canonicalizeUrl(col("u")).as("cg"),
       UrlOps.canonicalizeUrlRef(col("u")).as("cw"),
       UrlOps.surtKey(col("u")).as("sg"),
-      UrlOps.surtKeyRef(col("u")).as("sw"))
+      UrlOps.surtKeyRef(col("u")).as("sw"),
+      LinkGraph.hostOf(col("u")).as("hg"),
+      LinkGraph.hostOfRef(col("u")).as("hw"))
     val bad = df.where(not(col("cg") <=> col("cw")) ||
-      not(col("sg") <=> col("sw"))).collect()
+      not(col("sg") <=> col("sw")) || not(col("hg") <=> col("hw"))).collect()
     assert(bad.isEmpty, bad.take(10).mkString("; "))
   }
 }
