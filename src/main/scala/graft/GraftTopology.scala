@@ -161,8 +161,8 @@ final class GraftTopology private (
   /** `cluster.submitTopology` analog for streams: wire the topology into
    *  the exactly-once epoch-manifest sink (the engine's `StreamWriter` /
    *  Iceberg-table stand-in) and start it. Kill/resume-safe via the
-   *  checkpoint + the sink's re-delivered-epoch skip, same contract as
-   *  `graft.app.PagePipelineApp`.
+   *  checkpoint + the sink's re-delivered-epoch skip; this is how
+   *  `graft.app.PagePipelineApp` starts every mode.
    *
    *  @param bucketBy  optional (routeCol, nBuckets): route rows to
    *                   `<routeCol>_bucket` for the sink's bucketed layout
@@ -174,24 +174,21 @@ final class GraftTopology private (
   def startSink(tableDir: String, checkpointDir: String,
       triggerSec: Int = 5, bucketBy: Option[(String, Int)] = None,
       statsCol: Option[String] = None,
-      perBatch: DataFrame => DataFrame = GraftTopology.IdentityBatch): StreamingQuery = {
-    // validate at start, not at the first micro-batch (the app's rule:
-    // an async unresolved-column death inside foreachBatch is the worst
-    // way to learn a stage dropped the routing column). A custom
-    // perBatch may change the schema before the sink, so the column
-    // checks only apply when rows go to the sink as-is.
+      perBatch: DataFrame => DataFrame = identity): StreamingQuery = {
+    // validate at start, not at the first micro-batch: an async
+    // unresolved-column death inside foreachBatch is the worst way to
+    // learn a stage dropped the routing column. The columns checked are
+    // the ones the sink receives — perBatch applied to an empty batch of
+    // the stream's schema (analysis only, nothing runs)
     bucketBy.foreach { case (_, n) =>
       require(n > 0, s"bucketBy needs a positive bucket count, got $n") }
-    if (perBatch eq GraftTopology.IdentityBatch) {
-      bucketBy.foreach { case (route, _) =>
-        require(df.columns.contains(route),
-          s"bucketBy route column '$route' is not a topology output column " +
-            s"(writes: ${df.columns.mkString(", ")})")
-      }
-      statsCol.foreach(c => require(df.columns.contains(c),
-        s"statsCol '$c' is not a topology output column " +
-          s"(writes: ${df.columns.mkString(", ")})"))
-    }
+    val sinkCols = perBatch(df.sparkSession.createDataFrame(
+      java.util.Collections.emptyList[Row](), df.schema)).columns
+    def requireSinkCol(what: String, c: String): Unit =
+      require(sinkCols.contains(c), s"$what '$c' is not a column the sink " +
+        s"receives (writes: ${sinkCols.mkString(", ")})")
+    bucketBy.foreach { case (route, _) => requireSinkCol("bucketBy route column", route) }
+    statsCol.foreach(requireSinkCol("statsCol", _))
     val bucketColName = bucketBy.map { case (route, _) => s"${route}_bucket" }
     val sink = new ExactlyOnceSink(tableDir, bucketColName, statsCol)
     def withBucket(d: DataFrame): DataFrame = bucketBy match {
@@ -210,11 +207,6 @@ final class GraftTopology private (
 }
 
 object GraftTopology {
-  /** The default no-op per-batch transform; startSink's build-time
-   *  column checks apply only when this default is in use (a custom
-   *  perBatch may reshape rows before the sink). */
-  val IdentityBatch: DataFrame => DataFrame = identity
-
   /** `setSpout` analog: any batch or streaming DataFrame is a source —
    *  `spark.read.parquet`, `PageStream.fromRate`, `JsonlPages
    *  .streamPages`, a MemoryStream. One topology, either mode. */

@@ -23,20 +23,11 @@ import graft.sources.PageGenConfig
  */
 object ScalingBench {
 
-  private def session(cpus: Int): SparkSession = SparkSession.builder()
-    .master(s"local[$cpus]")
-    .appName(s"graft-scaling-$cpus")
-    .config("spark.sql.shuffle.partitions", cpus)
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
-    .config("spark.ui.enabled", "false")
-    // the north rule's state backend: RocksDB with changelog
-    // checkpointing (avoids full snapshot uploads per micro-batch)
-    .config("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    .getOrCreate()
+  // RocksDB with changelog checkpointing (avoids full snapshot uploads
+  // per micro-batch)
+  private def session(cpus: Int): SparkSession = GraftSession(s"graft-scaling-$cpus",
+    Some(cpus), "spark.sql.files.maxPartitionBytes" -> (32 * 1024 * 1024).toString,
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
 
   def main(args: Array[String]): Unit = {
     val nPages = if (args.length > 0) args(0).toLong else 1000000L

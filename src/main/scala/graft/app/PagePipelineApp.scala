@@ -1,9 +1,8 @@
 package graft.app
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
+import graft.GraftSession
 import graft.functions.ExtractHtmlText.extract_html_text
 import graft.sources.PageGenConfig
 import graft.streaming._
@@ -24,7 +23,7 @@ import graft.streaming._
  *      | --trending [--trend-epoch 3600] | --change-track
  *      | --oov-gate /lexicon.parquet [--oov-max 500]
  *      | --lm-gate /bigram_counts.parquet [--lm-min 30000]
- *      | --sem-gate /semgate_dir [--sem-tau 900000] [--sem-dim 32]
+ *      | --sem-gate /semgate_dir [--sem-tau 900000]
  *      | --linear-gate /weights.parquet [--linear-min 1]
  *      | --seen-gate /bloom.parquet [--seen-mbits 1048576]
  *                                   [--seen-k 5] [--seen-shards 1]] \
@@ -43,7 +42,7 @@ object PagePipelineApp {
       "--trending", "--change-track")
     val valueOpts = Set("--pages", "--hosts", "--rate", "--checkpoint", "--table", "--metrics",
       "--buckets", "--bucket-by", "--jsonl", "--oov-gate", "--oov-max",
-      "--lm-gate", "--lm-min", "--sem-gate", "--sem-tau", "--sem-dim",
+      "--lm-gate", "--lm-min", "--sem-gate", "--sem-tau",
       "--linear-gate", "--linear-min", "--trend-epoch",
       "--seen-gate", "--seen-mbits", "--seen-k", "--seen-shards")
     val kvArgs = args.filterNot(flags.contains)
@@ -88,17 +87,13 @@ object PagePipelineApp {
     if (pickedModes.length > 1)
       sys.error(s"pipeline modes are mutually exclusive, got: ${pickedModes.mkString(" ")}")
 
-    val builder = SparkSession.builder()
-      .appName("graft-page-pipeline")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // spark-submit injects spark.master; default to local[*] for bare runs
-    val spark = (if (sys.props.contains("spark.master")) builder
-                 else builder.master("local[*]")
-                   .config("spark.sql.shuffle.partitions",
-                     Runtime.getRuntime.availableProcessors)).getOrCreate()
+    // spark-submit injects spark.master; a bare run uses every core. The
+    // UI stays as submitted (on by default): a long-running job's
+    // streaming tab is its console
+    val spark = GraftSession("graft-page-pipeline",
+      if (sys.props.contains("spark.master")) None
+      else Some(Runtime.getRuntime.availableProcessors),
+      "spark.ui.enabled" -> sys.props.getOrElse("spark.ui.enabled", "true"))
     spark.sparkContext.setLogLevel("WARN")
 
     val listener = new MetricsListener(metricsPath)
@@ -252,28 +247,24 @@ object PagePipelineApp {
         val history = spark.read.parquet(s"$gateDir/history").cache()
         val semSeeds = spark.read.parquet(s"$gateDir/seeds").cache()
         val tau = a.getOrElse("--sem-tau", "900000").toLong
-        val dim = a.getOrElse("--sem-dim", "32").toInt
         // fail at startup, not silently at runtime: zero seeds would
         // blackhole the whole stream (nothing assignable => nothing
-        // admitted), and a dim mismatched with the artifacts would
-        // truncate every dot product (QuantizedDot zips to the shorter
-        // array) and systematically deflate cosines — the gate would
-        // quietly stop deduplicating
+        // admitted). The embedding dimension is the seeds table's
         val seedDims = semSeeds.select(size(col("sv"))).limit(1).collect()
         if (seedDims.isEmpty)
           sys.error(s"--sem-gate $gateDir: seeds table is empty — rebuild " +
             "the artifacts with a smaller seedMod (graft.tools.PrepareSemGate)")
-        if (seedDims.head.getInt(0) != dim)
-          sys.error(s"--sem-dim $dim does not match the artifacts' " +
-            s"dimension ${seedDims.head.getInt(0)} ($gateDir/seeds)")
-        // the history table must agree too: a seeds/history dim mismatch
-        // (artifacts rebuilt at a different dim) would pass the seeds
-        // check yet still truncate every history dot product. An EMPTY
-        // history is legal (cold-start gate: nothing kept yet).
+        val dim = seedDims.head.getInt(0)
+        // the history table must agree: a seeds/history dim mismatch
+        // (artifacts rebuilt at a different dim) would truncate every
+        // history dot product (QuantizedDot zips to the shorter array),
+        // systematically deflate cosines, and the gate would quietly stop
+        // deduplicating. An EMPTY history is legal (cold-start gate:
+        // nothing kept yet).
         val histDims = history.select(size(col("cv"))).limit(1).collect()
         if (histDims.nonEmpty && histDims.head.getInt(0) != dim)
-          sys.error(s"--sem-dim $dim does not match the history table's " +
-            s"dimension ${histDims.head.getInt(0)} ($gateDir/history)")
+          sys.error(s"the seeds table's dimension $dim does not match the " +
+            s"history table's dimension ${histDims.head.getInt(0)} ($gateDir/history)")
         val gate = (b: org.apache.spark.sql.DataFrame) =>
           graft.operators.RequestResponse.semDedupGateKeep(
             b, history, semSeeds, "url", "text", dim, tau)
@@ -366,23 +357,10 @@ object PagePipelineApp {
     // column is EXPLICIT (--bucket-by, default host): silently routing on
     // a different column would break the per-host pruned-read contract —
     // prep/near-dup modes collapse to (id, ts) where id is the url, so
-    // pass `--bucket-by id` there deliberately.
+    // pass `--bucket-by id` there deliberately. startSink refuses a route
+    // or stats column the mode's sink rows lack, at startup.
     val nBuckets = a.getOrElse("--buckets", "0").toInt
     val routeCol = a.getOrElse("--bucket-by", "host")
-    if (nBuckets > 0) {
-      // validate at startup, not at the first micro-batch: the collapsed
-      // sink schema is known per mode
-      val sinkCols =
-        if (prep || nearDup) Seq("id", "ts")
-        else if (linkGraph) Seq("src_host", "dst_host", "n_links")
-        else if (trending) Seq("key", "epoch", "score")
-        else if (changeTrack) Seq("url", "n_crawls", "n_changes", "change_pm")
-        else out.columns.toSeq
-      if (!sinkCols.contains(routeCol))
-        sys.error(s"--bucket-by $routeCol is not a sink output column " +
-          s"(this mode writes: ${sinkCols.mkString(", ")})")
-    }
-    val bucketColName = s"${routeCol}_bucket"
     // per-epoch event-time stats let readTimeRange prune epochs from the
     // manifests alone (streaming epochs are naturally time-clustered)
     val statsCol =
@@ -395,18 +373,9 @@ object PagePipelineApp {
         || a.contains("--linear-gate")
         || a.contains("--seen-gate")) Some("warc_ts")
       else Some("session_start")
-    val sink = new ExactlyOnceSink(table,
-      if (nBuckets > 0) Some(bucketColName) else None, statsCol)
-    def withBucket(d: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (nBuckets <= 0) d
-      else d.withColumn(bucketColName, ExactlyOnceSink.bucket(col(routeCol), nBuckets))
-    val q = out.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", cp)
-      .trigger(Trigger.ProcessingTime("5 seconds"))
-      .foreachBatch((df: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink.write(withBucket(collapse(df.toDF())), id))
-      .start()
+    val q = graft.GraftTopology.from(out).startSink(table, cp,
+      bucketBy = if (nBuckets > 0) Some((routeCol, nBuckets)) else None,
+      statsCol = statsCol, perBatch = collapse)
     q.awaitTermination()
   }
 }

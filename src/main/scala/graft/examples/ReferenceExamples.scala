@@ -29,14 +29,14 @@ import graft.operators.{TextAnalysis, Topology, Windows}
  * run unchanged on a streaming source (both spec'd);
  * [[e9ContrastEnhancement]] is stateless and streams the same way;
  * [[e8BackgroundSubtraction]]'s
- * streaming twin is the `Sessionize` plane (identical output, spec'd
+ * streaming twin is `SessionizeTwoPhase` (identical output, spec'd
  * there). The remaining chains use batch-only constructs in this form —
  * `lag`/`row_number` ordered windows (e4 — whose streaming twin is
  * `graft.streaming.SequentialPairs` — and e6), unwatermarked
  * groupBy-merge (e5), and multi-step aggregation (e2, e3's fan-in of
  * aggregated branches would need watermarked join bounds) — exactly the
  * shapes the engine's streaming plane re-expresses with
- * `flatMapGroupsWithState` state (`Sessionize`, `PatternDetect`,
+ * `flatMapGroupsWithState` state (`SessionizeTwoPhase`, `PatternDetect`,
  * `StreamDedup`) when they must run unbounded.
  */
 object ReferenceExamples {
@@ -187,7 +187,7 @@ object ReferenceExamples {
    *  op: each frame is judged against its stream's accumulated state.
    *  The engine's stateful per-key plane is sessionization (q12/q28);
    *  the batch chain uses [[Windows.session]], the streaming chain
-   *  `Sessionize`/`SessionizeTwoPhase` with identical output (spec'd). */
+   *  `SessionizeTwoPhase` with identical output (spec'd). */
   def e8BackgroundSubtraction(pages: DataFrame, gap: String = "30 minutes"): DataFrame =
     GraftTopology.from(pages)
       .op("decode")(extracted)

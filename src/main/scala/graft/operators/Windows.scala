@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.TimestampType
  *    (`bolt/BatchInputBolt.java:221-232`).
  *  - session windows (absent in the reference; nearest device is the
  *    TTL-based group eviction) → `session_window(ts, gap)` /
- *    [[Sessionize]] for the stateful form.
+ *    [[graft.streaming.SessionizeTwoPhase]] for the stateful form.
  *
  * These helpers exist so batch verification queries and streaming
  * pipelines share one window definition.
@@ -49,9 +49,8 @@ object Windows {
    * Session window (gap-merged) aggregation; end = last event + gap.
    *
    * Boundary convention: a gap of EXACTLY `gap` starts a NEW session —
-   * the same `diff >= gap` rule the streaming sessionizers
-   * ([[graft.streaming.Sessionize.assemble]],
-   * [[graft.streaming.SessionizeTwoPhase.mergeFrags]]) and every DuckDB
+   * the same `diff >= gap` rule the streaming sessionizer
+   * ([[graft.streaming.SessionizeTwoPhase.mergeFrags]]) and every DuckDB
    * oracle use. Spark's built-in `session_window` merges at the exact
    * boundary (probed: two events precisely `gap` apart land in ONE
    * window), so the window is built with `gap − 1 µs` and the reported

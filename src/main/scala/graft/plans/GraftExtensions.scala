@@ -5,7 +5,7 @@ import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Coalesce, Expression, ExpressionInfo, Literal}
 
 import graft.functions.ExtractHtmlText
-import graft.operators.{HashedTfVec, LangId, LshBucket, MinHashBandSigs, MinRollingHash, PqAdcScore, QualityScore, QuantizedDot, SimHash64}
+import graft.operators.{HashedTfVec, LangId, LshBucket, MinHashBandSigs, MinRollingHash, PqAdcScore, QualityScore, QuantizedDot, SimHash64, SpanHashes, WinnowHashes}
 
 /**
  * SQL surface of the engine's custom expressions, injected via
@@ -20,146 +20,68 @@ import graft.operators.{HashedTfVec, LangId, LshBucket, MinHashBandSigs, MinRoll
  * does is built-in Catalyst operators.
  */
 object GraftExtensions {
+
+  /** The literal integer arguments after the first, checked against the
+    * call shape `what` (`arity` arguments in all). */
+  private def intArgs(args: Seq[Expression], arity: Int, what: String): Seq[Int] = {
+    def bad = new IllegalArgumentException(s"$what; got $args")
+    if (args.length != arity) throw bad
+    args.tail.map {
+      case Literal(v, _) => v.toString.toInt
+      case _ => throw bad
+    }
+  }
+
+  /** Every function of the SQL surface: (name, usage, builder). Both
+    * registration paths below read this one table. */
+  private val Functions: Seq[(String, String, Seq[Expression] => Expression)] = Seq(
+    ("extract_html_text", "extract_html_text(html) - deterministic HTML->text over binary",
+      args => ExtractHtmlText(args.head)),
+    ("simhash64", "simhash64(text) - 64-bit near-dup sketch",
+      args => SimHash64(args.head)),
+    ("min_rolling_hash", "min_rolling_hash(text) - winnowing fingerprint",
+      args => MinRollingHash(args.head)),
+    // null text scores 0 / 'und' — same coalesce as the Column API, so
+    // a SQL-side ingest gate behaves identically
+    ("quality_score", "quality_score(text) - integer 0..100 ingest quality gate",
+      args => Coalesce(Seq(QualityScore(args.head), Literal(0)))),
+    ("lang_id", "lang_id(text) - stopword/CJK language heuristic",
+      args => Coalesce(Seq(LangId(args.head), Literal.create("und")))),
+    ("pq_adc", "pq_adc(lut, codes) - product-quantization ADC score",
+      args => PqAdcScore(args.head, args(1))),
+    ("dot_q", "dot_q(a, b) - quantized integer dot product of float arrays",
+      args => QuantizedDot(args.head, args(1))),
+    ("minhash_band_sigs", "minhash_band_sigs(text, n, bands) - per-row minhash band signatures",
+      args => {
+        val Seq(n, b) = intArgs(args, 3, "minhash_band_sigs(text, n, bands) with literal n/bands")
+        MinHashBandSigs(args.head, n, b)
+      }),
+    ("hashed_tf", "hashed_tf(text, dim) - feature-hashed unigram vector (hashing trick)",
+      args => HashedTfVec(args.head, intArgs(args, 2, "hashed_tf(text, dim) with literal dim").head)),
+    ("lsh_bucket", "lsh_bucket(v, nPlanes) - sign-random-projection bucket",
+      args => LshBucket(args.head, intArgs(args, 2, "lsh_bucket(v, nPlanes) with literal nPlanes").head)),
+    ("span_hashes", "span_hashes(text, n) - distinct n-token window md5s (span dedup)",
+      args => SpanHashes(args.head, intArgs(args, 2, "span_hashes(text, n) with literal n").head)),
+    ("winnow_hashes", "winnow_hashes(text, n, w) - winnowing pos:hash local fingerprints",
+      args => {
+        val Seq(n, w) = intArgs(args, 3, "winnow_hashes(text, n, w) with literal n/w")
+        WinnowHashes(args.head, n, w)
+      }))
+
   /** Register the same functions into an ALREADY-BUILT session (extensions
     * only apply at session build time; getOrCreate may reuse a session). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("extract_html_text",
-      (args: Seq[Expression]) => ExtractHtmlText(args.head), "scala_udf")
-    reg.createOrReplaceTempFunction("simhash64",
-      (args: Seq[Expression]) => SimHash64(args.head), "scala_udf")
-    reg.createOrReplaceTempFunction("min_rolling_hash",
-      (args: Seq[Expression]) => MinRollingHash(args.head), "scala_udf")
-    // null text scores 0 / 'und' — same coalesce as the Column API, so
-    // a SQL-side ingest gate behaves identically
-    reg.createOrReplaceTempFunction("quality_score",
-      (args: Seq[Expression]) => Coalesce(Seq(QualityScore(args.head), Literal(0))), "scala_udf")
-    reg.createOrReplaceTempFunction("lang_id",
-      (args: Seq[Expression]) => Coalesce(Seq(LangId(args.head), Literal.create("und"))), "scala_udf")
-    reg.createOrReplaceTempFunction("pq_adc",
-      (args: Seq[Expression]) => PqAdcScore(args.head, args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("dot_q",
-      (args: Seq[Expression]) => QuantizedDot(args.head, args(1)), "scala_udf")
-    reg.createOrReplaceTempFunction("minhash_band_sigs",
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(n, _),
-            org.apache.spark.sql.catalyst.expressions.Literal(b, _)) =>
-          MinHashBandSigs(t, n.toString.toInt, b.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"minhash_band_sigs(text, n, bands) with literal n/bands; got $other")
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("lsh_bucket",
-      (args: Seq[Expression]) => args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(n, _) =>
-          LshBucket(args.head, n.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"lsh_bucket nPlanes must be a literal, got $other")
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("hashed_tf",
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(d, _)) =>
-          HashedTfVec(t, d.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"hashed_tf(text, dim) with literal dim; got $other")
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("span_hashes",
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(n, _)) =>
-          graft.operators.SpanHashes(t, n.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"span_hashes(text, n) with literal n; got $other")
-      }, "scala_udf")
-    reg.createOrReplaceTempFunction("winnow_hashes",
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(n, _),
-            org.apache.spark.sql.catalyst.expressions.Literal(w, _)) =>
-          graft.operators.WinnowHashes(t, n.toString.toInt, w.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"winnow_hashes(text, n, w) with literal n/w; got $other")
-      }, "scala_udf")
+    Functions.foreach { case (name, _, builder) =>
+      reg.createOrReplaceTempFunction(name, builder, "scala_udf") }
   }
 }
 
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
-  private def info(name: String, usage: String): ExpressionInfo =
-    new ExpressionInfo("graft", null, name, usage, "")
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("extract_html_text"),
-      info("extract_html_text", "extract_html_text(html) - deterministic HTML->text over binary"),
-      (args: Seq[Expression]) => ExtractHtmlText(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("simhash64"),
-      info("simhash64", "simhash64(text) - 64-bit near-dup sketch"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("min_rolling_hash"),
-      info("min_rolling_hash", "min_rolling_hash(text) - winnowing fingerprint"),
-      (args: Seq[Expression]) => MinRollingHash(args.head)))
-    ext.injectFunction((
-      FunctionIdentifier("quality_score"),
-      info("quality_score", "quality_score(text) - integer 0..100 ingest quality gate"),
-      (args: Seq[Expression]) => Coalesce(Seq(QualityScore(args.head), Literal(0)))))
-    ext.injectFunction((
-      FunctionIdentifier("lang_id"),
-      info("lang_id", "lang_id(text) - stopword/CJK language heuristic"),
-      (args: Seq[Expression]) => Coalesce(Seq(LangId(args.head), Literal.create("und")))))
-    ext.injectFunction((
-      FunctionIdentifier("pq_adc"),
-      info("pq_adc", "pq_adc(lut, codes) - product-quantization ADC score"),
-      (args: Seq[Expression]) => PqAdcScore(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("dot_q"),
-      info("dot_q", "dot_q(a, b) - quantized integer dot product of float arrays"),
-      (args: Seq[Expression]) => QuantizedDot(args.head, args(1))))
-    ext.injectFunction((
-      FunctionIdentifier("minhash_band_sigs"),
-      info("minhash_band_sigs", "minhash_band_sigs(text, n, bands) - per-row minhash band signatures"),
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(n, _),
-            org.apache.spark.sql.catalyst.expressions.Literal(b, _)) =>
-          MinHashBandSigs(t, n.toString.toInt, b.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"minhash_band_sigs(text, n, bands) with literal n/bands; got $other")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("hashed_tf"),
-      info("hashed_tf", "hashed_tf(text, dim) - feature-hashed unigram vector (hashing trick)"),
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(d, _)) =>
-          HashedTfVec(t, d.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"hashed_tf(text, dim) with literal dim; got $other")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("lsh_bucket"),
-      info("lsh_bucket", "lsh_bucket(v, nPlanes) - sign-random-projection bucket"),
-      (args: Seq[Expression]) => args(1) match {
-        case org.apache.spark.sql.catalyst.expressions.Literal(n, _) =>
-          LshBucket(args.head, n.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"lsh_bucket nPlanes must be a literal, got $other")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("span_hashes"),
-      info("span_hashes", "span_hashes(text, n) - distinct n-token window md5s (span dedup)"),
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(n, _)) =>
-          graft.operators.SpanHashes(t, n.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"span_hashes(text, n) with literal n; got $other")
-      }))
-    ext.injectFunction((
-      FunctionIdentifier("winnow_hashes"),
-      info("winnow_hashes", "winnow_hashes(text, n, w) - winnowing pos:hash local fingerprints"),
-      (args: Seq[Expression]) => args match {
-        case Seq(t, org.apache.spark.sql.catalyst.expressions.Literal(n, _),
-            org.apache.spark.sql.catalyst.expressions.Literal(w, _)) =>
-          graft.operators.WinnowHashes(t, n.toString.toInt, w.toString.toInt)
-        case other =>
-          throw new IllegalArgumentException(s"winnow_hashes(text, n, w) with literal n/w; got $other")
-      }))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach { case (name, usage, builder) =>
+      ext.injectFunction((FunctionIdentifier(name),
+        new ExpressionInfo("graft", null, name, usage, ""), builder))
+    }
 }

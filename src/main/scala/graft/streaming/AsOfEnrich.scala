@@ -54,24 +54,6 @@ object AsOfEnrich {
   final case class AsOfState(bridge: List[(Long, Long)],
       pendEv: List[(Long, Long)], pendSn: List[(Long, Long)])
 
-  private def mergeSorted2(state: List[(Long, Long)],
-      freshRaw: Seq[(Long, Long)]): List[(Long, Long)] = {
-    if (freshRaw.isEmpty) return state
-    val fresh = freshRaw.distinct.sorted
-    val ord = Ordering[(Long, Long)]
-    val out = List.newBuilder[(Long, Long)]
-    var last: (Long, Long) = null
-    def push(x: (Long, Long)): Unit = if (x != last) { out += x; last = x }
-    val a = state.iterator.buffered
-    val b = fresh.iterator.buffered
-    while (a.hasNext && b.hasNext) {
-      if (ord.lteq(a.head, b.head)) push(a.next()) else push(b.next())
-    }
-    while (a.hasNext) push(a.next())
-    while (b.hasNext) push(b.next())
-    out.result()
-  }
-
   def enrich(spark: SparkSession, events: Dataset[AsOfEv],
       snaps: Dataset[AsOfSnap], watermarkDelay: String = "1 hour")
       : Dataset[Enriched] = {
@@ -88,9 +70,9 @@ object AsOfEnrich {
           // below-watermark arrivals dropped explicitly (engine policy):
           // matching them would retroactively change an emitted row
           val fresh = rows.filter(t => TsUtil.toUs(t.ts) >= wm).toSeq
-          val pendEv = mergeSorted2(st.pendEv,
+          val pendEv = PatternDetect.mergeSorted(st.pendEv,
             fresh.filter(_.side == 1).map(t => (TsUtil.toUs(t.ts), t.id)))
-          val pendSn = mergeSorted2(st.pendSn,
+          val pendSn = PatternDetect.mergeSorted(st.pendSn,
             fresh.filter(_.side == 0).map(t => (TsUtil.toUs(t.ts), t.sval)))
           val (finEv, unfinEv) = pendEv.partition(_._1 < wm)
           val (finSn, unfinSn) = pendSn.partition(_._1 < wm)

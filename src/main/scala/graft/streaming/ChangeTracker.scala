@@ -21,7 +21,7 @@ import graft.model.TsUtil
  * — every future arrival is guaranteed `ts >= wm > t`, so position of
  * `t` in the per-URL order can never change; below-watermark arrivals
  * are dropped explicitly (deterministic given (input, watermark), as in
- * [[Sessionize]]). Pending arrivals are buffered at most the watermark
+ * [[SessionizeTwoPhase]]). Pending arrivals are buffered at most the watermark
  * horizon; ties inside one timestamp break on `tie` then `fp`, matching
  * the batch operator's total order.
  *

@@ -2,10 +2,9 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import org.apache.spark.sql.types.LongType
 
 import graft.model.TsUtil
 
@@ -34,6 +33,10 @@ object PatternDetect {
   final case class Ev(key: Long, ts: Timestamp, kind: String, id: Long)
   final case class Match(key: Long, a_id: Long, a_ts: Timestamp, b_id: Long, b_ts: Timestamp)
 
+  /** One leg's buffer: `(tsUs, id)` entries, sorted ascending and
+    * distinct ([[mergeSorted]]'s invariant). */
+  private type Leg = List[(Long, Long)]
+
   /** Open A's and candidate B's, both within the live horizon (micros).
     * INVARIANT: both lists are sorted ascending and distinct — new
     * arrivals are merge-unioned in ([[mergeSorted]]), so an idle hot key
@@ -41,15 +44,16 @@ object PatternDetect {
   final case class PatState(openA: List[(Long, Long)], bs: List[(Long, Long)])
 
   /** Union of already-sorted-distinct `state` with a batch of new
-    * arrivals: sort only the (small) fresh set and merge. */
-  private[streaming] def mergeSorted(state: List[(Long, Long)],
-      freshRaw: Seq[(Long, Long)]): List[(Long, Long)] = {
+    * arrivals: sort only the (small) fresh set and merge. The one
+    * sorted-state merge of the streaming plane (CEP legs, as-of and
+    * successor buffers). */
+  private[streaming] def mergeSorted[T](state: List[T], freshRaw: Seq[T])(
+      implicit ord: Ordering[T]): List[T] = {
     if (freshRaw.isEmpty) return state
     val fresh = freshRaw.distinct.sorted
-    val ord = Ordering[(Long, Long)]
-    val out = List.newBuilder[(Long, Long)]
-    var last: (Long, Long) = null
-    def push(x: (Long, Long)): Unit = if (x != last) { out += x; last = x }
+    val out = List.newBuilder[T]
+    var last: Any = null
+    def push(x: T): Unit = if (x != last) { out += x; last = x }
     val a = state.iterator.buffered
     val b = fresh.iterator.buffered
     while (a.hasNext && b.hasNext) {
@@ -60,6 +64,62 @@ object PatternDetect {
     out.result()
   }
 
+  /** How a pattern's state class stores its legs, A's first. The
+    * classes are the state-store schema of running queries, so the
+    * `detect` maps to and from them instead of replacing them. */
+  private final case class Layout[S](enc: Encoder[S], legs: S => Seq[Leg],
+      of: Seq[Leg] => S)
+  private lazy val TwoLegs = Layout[PatState](Encoders.product[PatState],
+    s => Seq(s.openA, s.bs), l => PatState(l(0), l(1)))
+  private lazy val ThreeLegs = Layout[Pat3State](Encoders.product[Pat3State],
+    s => Seq(s.openA, s.bs, s.cs), l => Pat3State(l(0), l(1), l(2)))
+
+  /**
+   * The state machine behind every pattern. Per key and batch:
+   *  - take in each leg's arrivals of its kind (leg 0 = the A's), one
+   *    filter per leg, not a partition: with aKind == bKind every event
+   *    plays both roles (the quiescence degenerate case). Rows below the
+   *    watermark are dropped EXPLICITLY (same policy as StreamDedup and
+   *    SessionizeTwoPhase): the framework usually pre-filters them, but a
+   *    below-watermark A reaching here would be instantly ripe and could
+   *    resolve against leg buffers already evicted at this watermark;
+   *  - every A with `a + H < wm` is ripe: no leg entry that could change
+   *    its outcome can still arrive, so `resolve(key, a, legs)` is final;
+   *  - keep the leg entries `>= wm - H` — exactly the unripe A's, and the
+   *    other legs' entries an unripe A can still reach (they sit above it);
+   *  - drop the state when nothing is kept, else store it and wake one
+   *    horizon ahead of the watermark.
+   */
+  private def detect[S, O](events: Dataset[Ev], kinds: Seq[String],
+      horizonUs: Long, watermarkDelay: String, layout: Layout[S])(
+      resolve: (Long, (Long, Long), Seq[Leg]) => Option[O])(
+      implicit outEnc: Encoder[O]): Dataset[O] = {
+    import events.sparkSession.implicits._
+    val (toLegs, of) = (layout.legs, layout.of)
+    events
+      .withWatermark("ts", watermarkDelay)
+      .groupByKey(_.key)
+      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
+        (key: Long, rows: Iterator[Ev], state: GroupState[S]) => {
+          val wm = state.getCurrentWatermarkMs() * 1000L
+          val batch = rows.toSeq
+          val prev = state.getOption.map(toLegs).getOrElse(kinds.map(_ => Nil))
+          val legs = kinds.zip(prev).map { case (kind, leg) =>
+            mergeSorted(leg, batch.filter(e => e.kind == kind && TsUtil.toUs(e.ts) >= wm)
+              .map(e => (TsUtil.toUs(e.ts), e.id)))
+          }
+          val out = legs.head.takeWhile { case (aUs, _) => aUs + horizonUs < wm }
+            .flatMap(a => resolve(key, a, legs))
+          val kept = legs.map(_.dropWhile { case (us, _) => us < wm - horizonUs })
+          if (kept.forall(_.isEmpty)) state.remove()
+          else {
+            state.update(of(kept))
+            state.setTimeoutTimestamp((wm / 1000L).max(1L) + horizonUs / 1000L)
+          }
+          out.iterator
+        })(layout.enc, outEnc)
+  }
+
   /**
    * Streaming form. `events` must carry (key, ts, kind, id); rows with
    * kind == aKind open a pattern, kind == bKind close the earliest
@@ -68,56 +128,17 @@ object PatternDetect {
   def sequence(spark: SparkSession, events: Dataset[Ev],
       aKind: String, bKind: String, withinSec: Long,
       watermarkDelay: String = "1 hour"): Dataset[Match] = {
-    import spark.implicits._
     val withinUs = withinSec * 1000000L
-
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (key: Long, rows: Iterator[Ev], state: GroupState[PatState]) => {
-          val st = state.getOption.getOrElse(PatState(Nil, Nil))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          // two filters, not partition: with aKind == bKind every event
-          // plays both roles (the quiescence degenerate case)
-          val batch = rows.toSeq
-          val as = batch.filter(_.kind == aKind)
-          val bs = batch.filter(_.kind == bKind)
-          // accumulate new legs; rows below the watermark are dropped
-          // EXPLICITLY (same policy as StreamDedup.nearDupVerdicts and
-          // Sessionize): the framework usually pre-filters them, but a
-          // below-watermark A reaching here would be instantly ripe and
-          // could match against a B-buffer already evicted at this wm
-          val openA = mergeSorted(st.openA, as
-            .filter(e => TsUtil.toUs(e.ts) >= wm)
-            .map(e => (TsUtil.toUs(e.ts), e.id)).toSeq)
-          val allB = mergeSorted(st.bs, bs
-            .filter(e => TsUtil.toUs(e.ts) >= wm)
-            .map(e => (TsUtil.toUs(e.ts), e.id)).toSeq)
-
-          // resolve: A's whose deadline the watermark passed can match
-          // FINALLY (no earlier B can still arrive). Match = the first B
-          // strictly after the A within the window (ties by b id); B's
-          // are not consumed — "for each A, its first B" — so the batch
-          // mirror and the SQL oracle reproduce the streaming output
-          // exactly on any input.
-          val ripe = openA.filter { case (aUs, _) => aUs + withinUs < wm }
-          val out = ripe.flatMap { case (aUs, aId) =>
-            allB.find { case (bUs, _) => bUs > aUs && bUs <= aUs + withinUs }
-              .map { case (bUs, bId) =>
-                Match(key, aId, TsUtil.fromUs(aUs), bId, TsUtil.fromUs(bUs)) }
-          }
-          // keep: unripe A's; B's still inside any live A's window or the
-          // watermark horizon (an out-of-order A can still match them)
-          val keepA = openA.filterNot { case (aUs, _) => aUs + withinUs < wm }
-          val keepB = allB.filter { case (bUs, _) => bUs >= wm - withinUs }
-          if (keepA.isEmpty && keepB.isEmpty) state.remove()
-          else {
-            state.update(PatState(keepA, keepB))
-            state.setTimeoutTimestamp((wm / 1000L).max(1L) + withinSec * 1000L)
-          }
-          out.iterator
-        })(Encoders.product[PatState], Encoders.product[Match])
+    // Match = the first B strictly after the A within the window (ties
+    // by b id); B's are not consumed — "for each A, its first B" — so
+    // the batch mirror and the SQL oracle reproduce the streaming output
+    // exactly on any input.
+    detect(events, Seq(aKind, bKind), withinUs, watermarkDelay, TwoLegs) {
+      case (key, (aUs, aId), legs) =>
+        legs(1).find { case (bUs, _) => bUs > aUs && bUs <= aUs + withinUs }
+          .map { case (bUs, bId) =>
+            Match(key, aId, TsUtil.fromUs(aUs), bId, TsUtil.fromUs(bUs)) }
+    }(Encoders.product[Match])
   }
 
   final case class Absent(key: Long, a_id: Long, a_ts: Timestamp)
@@ -136,44 +157,12 @@ object PatternDetect {
   def absence(spark: SparkSession, events: Dataset[Ev],
       aKind: String, bKind: String, withinSec: Long,
       watermarkDelay: String = "1 hour"): Dataset[Absent] = {
-    import spark.implicits._
     val withinUs = withinSec * 1000000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (key: Long, rows: Iterator[Ev], state: GroupState[PatState]) => {
-          val st = state.getOption.getOrElse(PatState(Nil, Nil))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          // two filters, not partition: aKind == bKind must see every
-          // event on both sides (quiescence delegates here that way)
-          val batch = rows.toSeq
-          val as = batch.filter(_.kind == aKind)
-          val bs = batch.filter(_.kind == bKind)
-          // below-watermark arrivals dropped explicitly: a late A would be
-          // instantly ripe and could emit a false "absent" against an
-          // already-evicted B buffer
-          val openA = mergeSorted(st.openA, as
-            .filter(e => TsUtil.toUs(e.ts) >= wm)
-            .map(e => (TsUtil.toUs(e.ts), e.id)).toSeq)
-          val allB = mergeSorted(st.bs, bs
-            .filter(e => TsUtil.toUs(e.ts) >= wm)
-            .map(e => (TsUtil.toUs(e.ts), e.id)).toSeq)
-          val ripe = openA.filter { case (aUs, _) => aUs + withinUs < wm }
-          val out = ripe.collect {
-            case (aUs, aId) if !allB.exists { case (bUs, _) =>
-              bUs > aUs && bUs <= aUs + withinUs } =>
-              Absent(key, aId, TsUtil.fromUs(aUs))
-          }
-          val keepA = openA.filterNot { case (aUs, _) => aUs + withinUs < wm }
-          val keepB = allB.filter { case (bUs, _) => bUs >= wm - withinUs }
-          if (keepA.isEmpty && keepB.isEmpty) state.remove()
-          else {
-            state.update(PatState(keepA, keepB))
-            state.setTimeoutTimestamp((wm / 1000L).max(1L) + withinSec * 1000L)
-          }
-          out.iterator
-        })(Encoders.product[PatState], Encoders.product[Absent])
+    detect(events, Seq(aKind, bKind), withinUs, watermarkDelay, TwoLegs) {
+      case (key, (aUs, aId), legs) =>
+        if (legs(1).exists { case (bUs, _) => bUs > aUs && bUs <= aUs + withinUs }) None
+        else Some(Absent(key, aId, TsUtil.fromUs(aUs)))
+    }(Encoders.product[Absent])
   }
 
   /** Batch mirror of [[absence]]: A's with NO B in their window. */
@@ -218,47 +207,20 @@ object PatternDetect {
       aKind: String, bKind: String, cKind: String,
       within1Sec: Long, within2Sec: Long,
       watermarkDelay: String = "1 hour"): Dataset[Match3] = {
-    import spark.implicits._
     val w1 = within1Sec * 1000000L
     val w2 = within2Sec * 1000000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (key: Long, rows: Iterator[Ev], state: GroupState[Pat3State]) => {
-          val st = state.getOption.getOrElse(Pat3State(Nil, Nil, Nil))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = rows.toSeq
-          def leg(kind: String, prev: List[(Long, Long)]) =
-            mergeSorted(prev, batch.filter(e => e.kind == kind && TsUtil.toUs(e.ts) >= wm)
-              .map(e => (TsUtil.toUs(e.ts), e.id)))
-          val openA = leg(aKind, st.openA)
-          val allB = leg(bKind, st.bs)
-          val allC = leg(cKind, st.cs)
-          // ripe once no leg can change: first-B final at wm > a+w1, its
-          // first-C final at wm > b+w2 with b <= a+w1 — both implied by
-          // wm > a+w1+w2
-          val ripe = openA.filter { case (aUs, _) => aUs + w1 + w2 < wm }
-          val out = ripe.flatMap { case (aUs, aId) =>
-            allB.find { case (bUs, _) => bUs > aUs && bUs <= aUs + w1 }
-              .flatMap { case (bUs, bId) =>
-                allC.find { case (cUs, _) => cUs > bUs && cUs <= bUs + w2 }
-                  .map { case (cUs, cId) =>
-                    Match3(key, aId, TsUtil.fromUs(aUs), bId, TsUtil.fromUs(bUs),
-                      cId, TsUtil.fromUs(cUs)) } }
-          }
-          val keepA = openA.filterNot { case (aUs, _) => aUs + w1 + w2 < wm }
-          // an unripe A has aUs >= wm-w1-w2; its B candidates sit above
-          // that, and their C candidates above the B — one shared horizon
-          val keepB = allB.filter { case (bUs, _) => bUs >= wm - w1 - w2 }
-          val keepC = allC.filter { case (cUs, _) => cUs >= wm - w1 - w2 }
-          if (keepA.isEmpty && keepB.isEmpty && keepC.isEmpty) state.remove()
-          else {
-            state.update(Pat3State(keepA, keepB, keepC))
-            state.setTimeoutTimestamp((wm / 1000L).max(1L) + (within1Sec + within2Sec) * 1000L)
-          }
-          out.iterator
-        })(Encoders.product[Pat3State], Encoders.product[Match3])
+    // ripe once no leg can change: first-B final at wm > a+w1, its
+    // first-C final at wm > b+w2 with b <= a+w1 — both implied by
+    // wm > a+w1+w2, one shared horizon for all three legs
+    detect(events, Seq(aKind, bKind, cKind), w1 + w2, watermarkDelay, ThreeLegs) {
+      case (key, (aUs, aId), legs) =>
+        legs(1).find { case (bUs, _) => bUs > aUs && bUs <= aUs + w1 }
+          .flatMap { case (bUs, bId) =>
+            legs(2).find { case (cUs, _) => cUs > bUs && cUs <= bUs + w2 }
+              .map { case (cUs, cId) =>
+                Match3(key, aId, TsUtil.fromUs(aUs), bId, TsUtil.fromUs(bUs),
+                  cId, TsUtil.fromUs(cUs)) } }
+    }(Encoders.product[Match3])
   }
 
   /** Batch mirror of [[sequence3]] (the oracle form): first B per A,
@@ -315,46 +277,20 @@ object PatternDetect {
   def kleene(spark: SparkSession, events: Dataset[Ev],
       aKind: String, bKind: String, cKind: String, withinSec: Long,
       watermarkDelay: String = "1 hour"): Dataset[MatchK] = {
-    import spark.implicits._
     val w = withinSec * 1000000L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append(), GroupStateTimeout.EventTimeTimeout())(
-        (key: Long, rows: Iterator[Ev], state: GroupState[Pat3State]) => {
-          val st = state.getOption.getOrElse(Pat3State(Nil, Nil, Nil))
-          val wm = state.getCurrentWatermarkMs() * 1000L
-          val batch = rows.toSeq
-          def leg(kind: String, prev: List[(Long, Long)]) =
-            mergeSorted(prev, batch.filter(e => e.kind == kind && TsUtil.toUs(e.ts) >= wm)
-              .map(e => (TsUtil.toUs(e.ts), e.id)))
-          val openA = leg(aKind, st.openA)
-          val allB = leg(bKind, st.bs)
-          val allC = leg(cKind, st.cs)
-          val ripe = openA.filter { case (aUs, _) => aUs + w < wm }
-          val out = ripe.flatMap { case (aUs, aId) =>
-            // in-window B's, already sorted ascending by (ts, id)
-            val bs = allB.filter { case (bUs, _) => bUs > aUs && bUs <= aUs + w }
-            bs.headOption.flatMap { case (b1Us, _) =>
-              allC.find { case (cUs, _) => cUs > b1Us && cUs <= aUs + w }
-                .map { case (cUs, cId) =>
-                  val run = bs.takeWhile { case (bUs, _) => bUs < cUs }
-                  MatchK(key, aId, TsUtil.fromUs(aUs), run.size.toLong,
-                    run.head._2, run.last._2, cId, TsUtil.fromUs(cUs))
-                }
+    detect(events, Seq(aKind, bKind, cKind), w, watermarkDelay, ThreeLegs) {
+      case (key, (aUs, aId), legs) =>
+        // in-window B's, already sorted ascending by (ts, id)
+        val bs = legs(1).filter { case (bUs, _) => bUs > aUs && bUs <= aUs + w }
+        bs.headOption.flatMap { case (b1Us, _) =>
+          legs(2).find { case (cUs, _) => cUs > b1Us && cUs <= aUs + w }
+            .map { case (cUs, cId) =>
+              val run = bs.takeWhile { case (bUs, _) => bUs < cUs }
+              MatchK(key, aId, TsUtil.fromUs(aUs), run.size.toLong,
+                run.head._2, run.last._2, cId, TsUtil.fromUs(cUs))
             }
-          }
-          val keepA = openA.filterNot { case (aUs, _) => aUs + w < wm }
-          // an unripe A has aUs >= wm - w; all its B/C candidates sit above
-          val keepB = allB.filter { case (bUs, _) => bUs >= wm - w }
-          val keepC = allC.filter { case (cUs, _) => cUs >= wm - w }
-          if (keepA.isEmpty && keepB.isEmpty && keepC.isEmpty) state.remove()
-          else {
-            state.update(Pat3State(keepA, keepB, keepC))
-            state.setTimeoutTimestamp((wm / 1000L).max(1L) + withinSec * 1000L)
-          }
-          out.iterator
-        })(Encoders.product[Pat3State], Encoders.product[MatchK])
+        }
+    }(Encoders.product[MatchK])
   }
 
   /** Batch mirror of [[kleene]] (the oracle form): first B per A, first C

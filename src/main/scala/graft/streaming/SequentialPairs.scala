@@ -47,26 +47,6 @@ object SequentialPairs {
   final case class SuccState(bridge: List[(Long, Long, Long)],
       pending: List[(Long, Long, Long)])
 
-  /** [[PatternDetect.mergeSorted]] for the 3-tuple payload: union of
-    * sorted-distinct state with a small fresh batch, O(state) per batch. */
-  private def mergeSorted3(state: List[(Long, Long, Long)],
-      freshRaw: Seq[(Long, Long, Long)]): List[(Long, Long, Long)] = {
-    if (freshRaw.isEmpty) return state
-    val fresh = freshRaw.distinct.sorted
-    val ord = Ordering[(Long, Long, Long)]
-    val out = List.newBuilder[(Long, Long, Long)]
-    var last: (Long, Long, Long) = null
-    def push(x: (Long, Long, Long)): Unit = if (x != last) { out += x; last = x }
-    val a = state.iterator.buffered
-    val b = fresh.iterator.buffered
-    while (a.hasNext && b.hasNext) {
-      if (ord.lteq(a.head, b.head)) push(a.next()) else push(b.next())
-    }
-    while (a.hasNext) push(a.next())
-    while (b.hasNext) push(b.next())
-    out.result()
-  }
-
   def pairs(spark: SparkSession, events: Dataset[SeqEv],
       watermarkDelay: String = "1 hour"): Dataset[SuccPair] = {
     import spark.implicits._
@@ -83,7 +63,7 @@ object SequentialPairs {
           val fresh = rows
             .filter(e => TsUtil.toUs(e.ts) >= wm)
             .map(e => (TsUtil.toUs(e.ts), e.id, e.len)).toSeq
-          val buffered = mergeSorted3(st.pending, fresh)
+          val buffered = PatternDetect.mergeSorted(st.pending, fresh)
           // events below the watermark are FINAL: nothing can now land
           // between them
           val (fin, unfin) = buffered.partition(_._1 < wm)

@@ -12,8 +12,8 @@ import graft.streaming.Sessionize.PageLite
 /**
  * Two-phase (skew-proof) sessionizer.
  *
- * The naive per-key sessionizer ([[Sessionize]]) routes EVERY event of a
- * host to one task — a Zipf-hot host (StormCV's `fieldsGrouping` hotspot,
+ * A naive per-key sessionizer (buffer every event per host in
+ * `flatMapGroupsWithState`) routes EVERY event of a host to one task — a Zipf-hot host (StormCV's `fieldsGrouping` hotspot,
  * SURVEY.md §2.8) becomes the straggler that floors every micro-batch.
  *
  * Fix: session assembly is an **interval union**, and interval union is

@@ -122,7 +122,7 @@ object StreamDedup {
             // "10"), matching the batch mirror's smaller-id-wins rule (q44)
             val arrivals = rows.toSeq
               .map(p => (graft.model.TsUtil.toUs(p.ts), p))
-              .filter(_._1 >= wm) // explicit late-row drop, like Sessionize
+              .filter(_._1 >= wm) // explicit late-row drop, like SessionizeTwoPhase
               .sortBy { case (us, p) => (us, p.id.length, p.id) }
             if (arrivals.isEmpty) Iterator.empty
             else {

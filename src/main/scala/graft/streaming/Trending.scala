@@ -18,7 +18,7 @@ import graft.model.TsUtil
  * reference analog: the TTL'd `History` buffer
  * (`bolt/BatchInputBolt.java:241`) whose wall-clock expiry this
  * replaces with event-time watermark finality, the same trade made by
- * [[Sessionize]].
+ * [[SessionizeTwoPhase]].
  *
  * Emission rule: epoch `e` is emitted exactly when the watermark passes
  * its END (`(e+1)·epochUs <= wm`) — at that point no event of `e` can
@@ -86,7 +86,7 @@ object Trending {
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
         (key: String, rows: Iterator[Hit], state: GroupState[TState]) =>
           val wmUs = state.getCurrentWatermarkMs() * 1000L
-          // explicit late drop, as in Sessionize: deterministic given
+          // explicit late drop, as in SessionizeTwoPhase: deterministic given
           // (input, watermark), and the finalize-once guarantee follows —
           // an event of a finalized epoch is necessarily below-watermark
           val incoming = rows.map(h => TsUtil.toUs(h.ts))

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.BloomSet
 import graft.sources.{PageGen, PageGenConfig}
 
@@ -29,13 +29,7 @@ object PrepareSeenGate {
     val mBits = if (args.length > 3) args(3).toLong else (1L << 20)
     val kHashes = if (args.length > 4) args(4).toInt else 5
     val shards = if (args.length > 5) args(5).toInt else 1
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-prepare-seen-gate")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-prepare-seen-gate", Some(8))
     spark.sparkContext.setLogLevel("ERROR")
     val urls = PageGen.rawPages(spark, PageGenConfig(nPages = nPages,
       nHosts = nHosts, parallelism = 8)).select(col("url"))

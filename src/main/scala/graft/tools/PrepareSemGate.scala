@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.ExtractHtmlText.extract_html_text
 import graft.operators.{Similarity, TextAnalysis, VectorOps}
 import graft.sources.{PageGen, PageGenConfig}
@@ -34,13 +34,7 @@ object PrepareSemGate {
     val dim = if (args.length > 3) args(3).toInt else 32
     val tau = if (args.length > 4) args(4).toLong else 900000L
     val seedMod = if (args.length > 5) args(5).toLong else 256L
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-prepare-sem-gate")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-prepare-sem-gate", Some(8))
     spark.sparkContext.setLogLevel("ERROR")
     val pages = PageGen.rawPages(spark, PageGenConfig(nPages = nPages,
         nHosts = nHosts, parallelism = 8))

@@ -1,8 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.sources.{PageGen, PageGenConfig}
 
 /**
@@ -20,13 +20,7 @@ object PrepareSrc {
     val nHosts = if (args.length > 2) args(2).toInt else 2000
     val paraMult = if (args.length > 3) args(3).toInt else 6
     val nFiles = if (args.length > 4) args(4).toInt else 256
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-prepare-src")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession("graft-prepare-src", Some(32))
     spark.sparkContext.setLogLevel("ERROR")
     val cfg = PageGenConfig(nPages = nPages, nHosts = nHosts,
       paraMult = paraMult, parallelism = 32)

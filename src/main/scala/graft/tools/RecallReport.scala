@@ -1,9 +1,10 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.operators.{ProductQuant, Similarity, VectorOps}
 
 /**
@@ -25,9 +26,7 @@ object RecallReport {
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01"))
     val outPath = args.lift(1).getOrElse("BENCH/RECALL.md")
     val k = 10
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = GraftSession("graft-recall-report", Some(32))
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

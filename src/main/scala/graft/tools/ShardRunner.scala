@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.GraftSession
 
 /**
  * One "executor" of the multi-JVM scaling protocol: a local[cores] JVM
@@ -26,18 +26,9 @@ object ShardRunner {
     val rows = args(1).toLong
     val cores = args(2).toInt
     val warmupDir = if (args.length > 3) Some(args(3)) else None
-    val spark = SparkSession.builder()
-      .master(s"local[$cores]")
-      .appName(s"graft-shard")
-      .config("spark.sql.shuffle.partitions", cores)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", 32 * 1024 * 1024)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-      .getOrCreate()
+    val spark = GraftSession("graft-shard", Some(cores),
+      "spark.sql.files.maxPartitionBytes" -> (32 * 1024 * 1024).toString,
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
     spark.sparkContext.setLogLevel("ERROR")
     warmupDir.foreach { w =>
       graft.StreamPipelineBench.stream(spark, w, 1L, filesPerTrigger = 32)

@@ -162,6 +162,12 @@ class GraftTopologySpec extends SparkSpec {
       topo.startSink("/tmp/never-created", "/tmp/never-created-cp",
         bucketBy = Some(("host", 0)))
     }
+    // a perBatch that drops the route column: checked on what the sink
+    // receives, not on the topology's own output
+    intercept[IllegalArgumentException] {
+      topo.startSink("/tmp/never-created", "/tmp/never-created-cp",
+        bucketBy = Some(("host", 8)), perBatch = _.drop("host"))
+    }
   }
 
   test("startSink runs the topology into the exactly-once table") {

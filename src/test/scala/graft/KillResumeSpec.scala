@@ -8,7 +8,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Windows
-import graft.streaming.{ExactlyOnceSink, Sessionize}
+import graft.streaming.{ExactlyOnceSink, SessionizeTwoPhase}
 import graft.streaming.Sessionize.PageLite
 
 /**
@@ -28,8 +28,7 @@ class KillResumeSpec extends SparkSpec {
     val sink = new ExactlyOnceSink(table)
     val input = MemoryStream[PageLite](Encoders.product[PageLite], spark)
 
-    def start() = Sessionize.sessions(
-      input.toDS().withWatermark("warc_ts", "5 minutes"))
+    def start() = SessionizeTwoPhase.sessions(input.toDS(), watermarkDelaySec = 300L)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", cp)
@@ -85,8 +84,7 @@ class KillResumeSpec extends SparkSpec {
     val sink = new ExactlyOnceSink(table)
     val input = MemoryStream[PageLite](Encoders.product[PageLite], spark)
 
-    def start() = Sessionize.sessions(
-      input.toDS().withWatermark("warc_ts", "5 minutes"))
+    def start() = SessionizeTwoPhase.sessions(input.toDS(), watermarkDelaySec = 300L)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", cp)

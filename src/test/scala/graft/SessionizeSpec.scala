@@ -7,36 +7,17 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Windows
-import graft.streaming.Sessionize
-import graft.streaming.Sessionize.{Ev, PageLite}
+import graft.streaming.Sessionize.PageLite
+import graft.streaming.SessionizeTwoPhase
 
 class SessionizeSpec extends SparkSpec {
 
   private def ts(sec: Long): Timestamp = new Timestamp(sec * 1000L)
-  private val GAP_US = 1800L * 1000000L
-
-  test("assemble: splits by gap, closes by watermark, keeps open tail") {
-    val evs = Seq(Ev(0L, 10), Ev(60L * 1000000, 20), // session 1 (0..60s)
-      Ev(4000L * 1000000, 30), Ev(4100L * 1000000, 40)) // session 2
-    // watermark closes only session 1
-    val (closed, open) = Sessionize.assemble("h", evs, GAP_US, 3600L * 1000000)
-    assert(closed.size == 1)
-    assert(closed.head.n_pages == 2 && closed.head.text_bytes == 30)
-    assert(closed.head.session_end.getTime == (60L + 1800L) * 1000L)
-    assert(open.size == 2)
-    // full watermark closes both
-    val (closed2, open2) = Sessionize.assemble("h", evs, GAP_US, 100000L * 1000000)
-    assert(closed2.size == 2 && open2.isEmpty)
-    // out-of-order input produces identical sessions
-    val (closed3, _) = Sessionize.assemble("h", evs.reverse, GAP_US, 100000L * 1000000)
-    assert(closed3 == closed2)
-  }
 
   test("streaming sessionizer matches batch session_window on out-of-order input") {
     import spark.implicits._
     val input = MemoryStream[PageLite](Encoders.product[PageLite], spark)
-    val sessions = Sessionize.sessions(
-      input.toDS().withWatermark("warc_ts", "10 minutes"))
+    val sessions = SessionizeTwoPhase.sessions(input.toDS(), watermarkDelaySec = 600L)
     val q = sessions.writeStream.format("memory")
       .queryName("sess_out").outputMode("append").start()
     try {
@@ -102,12 +83,14 @@ class SessionizeSpec extends SparkSpec {
       val input = MemoryStream[PageLite](Encoders.product[PageLite], spark)
       val input2 = MemoryStream[PageLite](Encoders.product[PageLite], spark)
       // delay longer than any trial's span: no row is ever late, so both
-      // streaming sessionizers must reproduce the batch result EXACTLY
-      val sessions = Sessionize.sessions(
-        input.toDS().withWatermark("warc_ts", "200 hours"))
+      // streams must reproduce the batch result EXACTLY. The first spreads
+      // every batch over 3 partitions, so one host's events reach phase 2
+      // as several fragments; the second delivers each batch whole
+      val sessions = SessionizeTwoPhase.sessions(
+        input.toDS().repartition(3), watermarkDelaySec = 720000L)
       val q = sessions.writeStream.format("memory")
         .queryName(s"sess_tort_$trial").outputMode("append").start()
-      val q2 = graft.streaming.SessionizeTwoPhase.sessions(
+      val q2 = SessionizeTwoPhase.sessions(
         input2.toDS(), watermarkDelaySec = 720000L)
         .writeStream.format("memory")
         .queryName(s"sess_tort2_$trial").outputMode("append").start()
@@ -148,8 +131,7 @@ class SessionizeSpec extends SparkSpec {
   test("late rows beyond the watermark are dropped deterministically") {
     import spark.implicits._
     val input = MemoryStream[PageLite](Encoders.product[PageLite], spark)
-    val sessions = Sessionize.sessions(
-      input.toDS().withWatermark("warc_ts", "1 minute"))
+    val sessions = SessionizeTwoPhase.sessions(input.toDS(), watermarkDelaySec = 60L)
     val q = sessions.writeStream.format("memory")
       .queryName("sess_late").outputMode("append").start()
     try {

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.Windows
 import graft.sources.{PageGen, PageGenConfig}
-import graft.streaming.{Sessionize, SessionizeTwoPhase}
+import graft.streaming.SessionizeTwoPhase
 import graft.streaming.Sessionize.PageLite
 import graft.streaming.SessionizeTwoPhase.Frag
 
@@ -45,13 +45,10 @@ class SessionizeTwoPhaseSpec extends SparkSpec {
     assert(twoPhase == oracle)
   }
 
-  test("two-phase streaming sessionizer equals single-phase on out-of-order stream") {
+  test("two-phase streaming equals sessionsBatch on an out-of-order stream") {
     import spark.implicits._
-    val in1 = MemoryStream[PageLite](Encoders.product[PageLite], spark)
-    val in2 = MemoryStream[PageLite](Encoders.product[PageLite], spark)
-    val q1 = Sessionize.sessions(in1.toDS().withWatermark("warc_ts", "10 minutes"))
-      .writeStream.format("memory").queryName("sp_one").outputMode("append").start()
-    val q2 = SessionizeTwoPhase.sessions(in2.toDS(), watermarkDelaySec = 600L)
+    val input = MemoryStream[PageLite](Encoders.product[PageLite], spark)
+    val q = SessionizeTwoPhase.sessions(input.toDS(), watermarkDelaySec = 600L)
       .writeStream.format("memory").queryName("sp_two").outputMode("append").start()
     try {
       val base = 1700000000L
@@ -62,16 +59,13 @@ class SessionizeTwoPhaseSpec extends SparkSpec {
           PageLite("b.example", ts(base + 200), 6), PageLite("b.example", ts(base + 9000), 7)),
         Seq(PageLite("zz.flush", ts(base + 100000), 0)),
         Seq(PageLite("zz.flush", ts(base + 200000), 0)))
-      batches.foreach { b =>
-        in1.addData(b); q1.processAllAvailable()
-        in2.addData(b); q2.processAllAvailable()
-      }
-      def grab(t: String) = spark.table(t).where($"host" =!= "zz.flush")
+      batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      def grab(d: org.apache.spark.sql.DataFrame) = d.where($"host" =!= "zz.flush")
         .select($"host", unix_micros($"session_start"), unix_micros($"session_end"),
           $"n_pages", $"text_bytes").collect().map(_.toSeq).toSet
-      val one = grab("sp_one")
-      val two = grab("sp_two")
+      val one = grab(SessionizeTwoPhase.sessionsBatch(spark, batches.flatten.toDS()).toDF())
+      val two = grab(spark.table("sp_two"))
       assert(one == two && one.nonEmpty, s"one=$one\ntwo=$two")
-    } finally { q1.stop(); q2.stop() }
+    } finally q.stop()
   }
 }

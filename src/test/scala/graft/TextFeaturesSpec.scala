@@ -255,12 +255,31 @@ class TextFeaturesSpec extends SparkSpec {
       val counts = w.groupBy(identity).map(_._2.size)
       (counts.max, w.size - counts.count(_ == 1))
     }
-    val got = cases.toDF("t")
+    val rows = cases.toDF("t")
       .select(col("t"), TextAnalysis.wordArray(col("t")).as("w"))
       .select(col("t"), TextAnalysis.topWordCount(col("w")).as("topn"),
-        TextAnalysis.dupWordCount(col("w")).as("dupn"))
-      .collect().map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
+        TextAnalysis.dupWordCount(col("w")).as("dupn"),
+        TextAnalysis.topWordCountHof(col("w")).as("topn_hof"),
+        TextAnalysis.dupWordCountHof(col("w")).as("dupn_hof"),
+        TextAnalysis.ngramCoverStats(col("w"), 2).as("cover2"),
+        TextAnalysis.ngramCoverStatsHof(col("w"), 2).as("cover2_hof"),
+        TextAnalysis.ngramCoverStats(col("w"), 3).as("cover3"),
+        TextAnalysis.ngramCoverStatsHof(col("w"), 3).as("cover3_hof"))
+      .collect()
+    val got = rows.map(r => r.getString(0) -> (r.getInt(1), r.getInt(2))).toMap
     cases.foreach { s => assert(got(s) === ref(s), s"input: '$s'") }
+    // the interpreted-HOF references equal the codegen'd scans
+    // (WordRepScan, NgramCoverScan) row for row
+    def cover(r: org.apache.spark.sql.Row, i: Int): (Int, Int) = {
+      val c = r.getStruct(i)
+      (c.getInt(c.fieldIndex("top")), c.getInt(c.fieldIndex("dup")))
+    }
+    rows.foreach { r =>
+      val s = r.getString(0)
+      assert((r.getInt(3), r.getInt(4)) === (r.getInt(1), r.getInt(2)), s"HOF word counts, input: '$s'")
+      assert(cover(r, 6) === cover(r, 5), s"HOF 2-gram cover, input: '$s'")
+      assert(cover(r, 8) === cover(r, 7), s"HOF 3-gram cover, input: '$s'")
+    }
   }
 
   test("n-gram repetition covers match an independent Scala reference") {
