@@ -161,9 +161,12 @@ final class GraftTopology private (
   /** `cluster.submitTopology` analog for streams: wire the topology into
    *  the exactly-once epoch-manifest sink (the engine's `StreamWriter` /
    *  Iceberg-table stand-in) and start it. Kill/resume-safe via the
-   *  checkpoint + the sink's re-delivered-epoch skip; this is how
-   *  `graft.app.PagePipelineApp` starts every mode.
+   *  checkpoint + the sink's re-delivered-epoch skip. This is the one
+   *  `writeStream` start-up: `graft.app.PagePipelineApp` starts every
+   *  mode through it, `graft.streaming.RequestService` every service and
+   *  `graft.StreamPipelineBench` its measured run.
    *
+   *  @param trigger   micro-batch trigger (default: every 5 s)
    *  @param bucketBy  optional (routeCol, nBuckets): route rows to
    *                   `<routeCol>_bucket` for the sink's bucketed layout
    *  @param statsCol  column min/max recorded per epoch for read-side
@@ -172,17 +175,20 @@ final class GraftTopology private (
    *                   (e.g. `StreamDedup.keptInBatch`) — runs under the
    *                   sink's idempotence, so it may consult the table */
   def startSink(tableDir: String, checkpointDir: String,
-      triggerSec: Int = 5, bucketBy: Option[(String, Int)] = None,
+      trigger: Trigger = Trigger.ProcessingTime("5 seconds"),
+      bucketBy: Option[(String, Int)] = None,
       statsCol: Option[String] = None,
       perBatch: DataFrame => DataFrame = identity): StreamingQuery = {
     // validate at start, not at the first micro-batch: an async
     // unresolved-column death inside foreachBatch is the worst way to
     // learn a stage dropped the routing column. The columns checked are
     // the ones the sink receives — perBatch applied to an empty batch of
-    // the stream's schema (analysis only, nothing runs)
+    // the stream's schema. Lazy: only a start with a bucket or stats
+    // column to check pays for it (a perBatch may run a job even on an
+    // empty batch)
     bucketBy.foreach { case (_, n) =>
       require(n > 0, s"bucketBy needs a positive bucket count, got $n") }
-    val sinkCols = perBatch(df.sparkSession.createDataFrame(
+    lazy val sinkCols = perBatch(df.sparkSession.createDataFrame(
       java.util.Collections.emptyList[Row](), df.schema)).columns
     def requireSinkCol(what: String, c: String): Unit =
       require(sinkCols.contains(c), s"$what '$c' is not a column the sink " +
@@ -199,7 +205,7 @@ final class GraftTopology private (
     df.writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.ProcessingTime(s"$triggerSec seconds"))
+      .trigger(trigger)
       .foreachBatch((b: Dataset[Row], id: Long) =>
         sink.write(withBucket(perBatch(b.toDF())), id))
       .start()

@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.ExtractHtmlText.extract_html_text
 import graft.sources.{PageGen, PageGenConfig}
-import graft.streaming.{ExactlyOnceSink, MetricsListener, SessionizeTwoPhase}
+import graft.streaming.{MetricsListener, SessionizeTwoPhase}
 
 /**
  * End-to-end streaming page-pipeline benchmark — the E1-equivalent
@@ -41,7 +41,6 @@ object StreamPipelineBench {
       filesPerTrigger: Int = 128): Result = {
     val work = Files.createTempDirectory("graft-bench-run").toString
     val schema = spark.read.parquet(srcDir).schema
-    val sink = new ExactlyOnceSink(s"$work/out")
     val listener = new MetricsListener()
     spark.streams.addListener(listener)
     val t0 = System.nanoTime()
@@ -54,13 +53,8 @@ object StreamPipelineBench {
     // fragment merge — the Zipf-hot host costs (#partitions) fragments per
     // batch in the stateful stage, not all of its events
     val sessions = SessionizeTwoPhase.fromPages(spark, pages, watermarkDelaySec = 7200L)
-    val q = sessions.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$work/cp")
-      .trigger(Trigger.AvailableNow())
-      .foreachBatch((ds: org.apache.spark.sql.Dataset[graft.model.HostSession], id: Long) =>
-        sink.write(ds.toDF(), id))
-      .start()
+    val q = GraftTopology.from(sessions.toDF())
+      .startSink(s"$work/out", s"$work/cp", trigger = Trigger.AvailableNow())
     q.awaitTermination()
     val wall = (System.nanoTime() - t0) / 1e9
     spark.streams.removeListener(listener)

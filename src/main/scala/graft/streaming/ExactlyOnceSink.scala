@@ -79,6 +79,15 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
  * unified schema and resets the flag. The marker also makes opening a
  * table with the WRONG `bucketCol` a loud error instead of a silent
  * mis-read.
+ *
+ * **Maintenance** is one path: [[compact]] folds the committed epochs
+ * into one snapshot, [[gcUnreferenced]] retires what it superseded.
+ * Logs written by older versions may still hold per-bucket snapshot
+ * records. Such a record has no `"epoch"` key and its horizon key is
+ * not `"compact_hi"`, so it matches neither an epoch nor a snapshot
+ * record: reads ignore it and serve the per-epoch data it was derived
+ * from, which it never touched. Its data directories are an unknown
+ * layout to GC and are kept.
  */
 class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     statsCol: Option[String] = None, logSegCap: Int = 1000)
@@ -218,14 +227,13 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     (s"$tableDir/data/epoch=$e", epochManifest(e))
   private def snapSrc(h: Long): (String, Path) =
     (s"$tableDir/data/compact-$h", compactManifest(h))
-  private def bsnapSrc(n: Long, h: Long): (String, Path) =
-    (bcompactData(h, n), bcompactManifest(h, n))
 
   /** Everything a public operation needs, derived from ONE read of the
-    * log: the compaction horizon, the epoch ids, the active bucket
-    * snapshots and every manifest body (bucket counts, time envelopes,
-    * schema fingerprints). Sources are (dataPath, manifestPath) pairs;
-    * the manifest path names the record, the body comes from the log. */
+    * log: the compaction horizon, the epoch ids and every manifest body
+    * (bucket counts, time envelopes, schema fingerprints). Sources are
+    * (dataPath, manifestPath) pairs; the manifest path names the record,
+    * the body comes from the log. A record of any other kind (a legacy
+    * bucket snapshot) is ignored. */
   private final class LogView(val head: Option[(Long, Long)], val entries: Seq[String]) {
     val hi: Option[Long] = entries.flatMap(compactHiOfEntry).maxOption
     val epochs: Seq[Long] = entries.flatMap(epochOfEntry).distinct.sorted
@@ -234,19 +242,8 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     def current: Seq[(String, Path)] =
       hi.map(snapSrc).toSeq ++ epochs.filter(e => hi.forall(e > _)).map(epochSrc)
 
-    /** Active bucket snapshots (newest per bucket, above the global
-      * compaction horizon): Seq of (bucket, hi). */
-    lazy val bucketSnaps: Seq[(Long, Long)] = {
-      val ghi = hi.getOrElse(-1L)
-      entries.flatMap(bucketCompactOfEntry).filter(_._2 > ghi).groupBy(_._1)
-        .map { case (n, xs) => n -> xs.map(_._2).max }.toSeq.sortBy(_._1)
-    }
-
     private lazy val bodies: Map[String, String] = entries.flatMap { e =>
-      // order matters: a bucket-snapshot record also carries keys of its
-      // own kind — probe it FIRST
-      bucketCompactOfEntry(e).map { case (n, h) => bcompactManifest(h, n).getName -> e }
-        .orElse(epochOfEntry(e).map(id => epochManifest(id).getName -> e))
+      epochOfEntry(e).map(id => epochManifest(id).getName -> e)
         .orElse(compactHiOfEntry(e).map(h => compactManifest(h).getName -> e))
     }.toMap
 
@@ -564,93 +561,6 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
         .map(x => x.group(1).toLong -> x.group(2).toLong).toMap
     }.getOrElse(Map.empty)
 
-  // ---- per-bucket snapshots (incremental compaction) -----------------
-  // `compactBuckets` folds ONE bucket's epoch slices into a
-  // `data/bcompact-<hi>-<bucket>` dir with a `bcompact-<hi>-<bucket>.json`
-  // record (logged like any commit). Reads substitute the snapshot for
-  // the covered `__<bucketCol>=<n>` epoch subdirs; per-epoch manifests
-  // and data stay intact (readAsOf/readBetween still serve exact
-  // history), so this is a pure read-path optimization between full
-  // compactions — at 100 TB you compact the hot buckets incrementally
-  // instead of rewriting the whole table, and a hot-bucket query reads
-  // one snapshot plus the few epochs after it. A full compact() covers
-  // every bucket and retires these (log truncation + GC).
-
-  private def bcompactManifest(hi: Long, n: Long): Path =
-    new Path(manifestDir, f"bcompact-$hi%010d-$n.json")
-  private def bcompactData(hi: Long, n: Long): String =
-    f"$tableDir/data/bcompact-$hi%010d-$n"
-
-  /** (bucket, hi) of a bucket-snapshot record. */
-  private def bucketCompactOfEntry(js: String): Option[(Long, Long)] =
-    for {
-      h <- """"bucket_compact_hi":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
-      n <- """"bucket":\s*(-?\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
-    } yield (n, h)
-
-  /**
-   * Incrementally compact a RANGE of buckets (bucketed sinks only): for
-   * each bucket, fold its previous bucket snapshot (if any) plus its
-   * `__<bucketCol>=<n>` slices of the epochs committed since into one
-   * fresh snapshot, and log the record. Idempotent per (bucket, current
-   * max epoch); buckets with no data are skipped. Epoch manifests and
-   * data dirs are NOT touched — full history remains readable and a
-   * later full [[compact]] retires everything. Safe under kill/resume
-   * interleaving with writes (spec-asserted): each snapshot is published
-   * with the same write-then-log discipline as an epoch commit.
-   */
-  def compactBuckets(spark: SparkSession, buckets: Range,
-      targetPartitions: Int = 1): Unit = {
-    val bn = bucketCol.getOrElse(throw new IllegalArgumentException(
-      s"bucket compaction requires a bucketed sink (bucketCol=None in $tableDir)"))
-    val f = fs()
-    val marker = readMeta(f, tableMeta)
-    marker.foreach(requireLayoutMatch)
-    val v = readLog(f)
-    val epochs = v.epochs.filter(e => v.hi.forall(e > _))
-    if (epochs.isEmpty) return
-    val hi = epochs.max
-    val prev = v.bucketSnaps.toMap
-    val jsons = epochs.map(e => v.body(epochManifest(e)))
-    // a table with commits has a marker (see write())
-    val merge = marker.exists(evolvedOf)
-    for (n <- buckets; if !prev.get(n).contains(hi)) {
-      val phi = prev.get(n)
-      // only epochs after the previous bucket snapshot, only with rows
-      val cover = epochs.zip(jsons).filter { case (e, _) => phi.forall(e > _) }
-      val withRows = cover.filter { case (_, js) => bucketRowsOf(js).getOrElse(n, 0L) > 0L }
-      val paths = phi.map(h => bcompactData(h, n)).toSeq ++
-        withRows.map { case (e, _) => s"$tableDir/data/epoch=$e/${shadowCol(bn)}=$n" }
-      if (paths.nonEmpty) {
-        val dataPath = bcompactData(hi, n)
-        val src = readPaths(spark, paths, merge)
-        src.coalesce(targetPartitions).write.mode(SaveMode.Overwrite).parquet(dataPath)
-        // metadata folded from the captured records — no second data scan
-        val prevJson = phi.map(h => v.body(bcompactManifest(h, n)))
-        val rows = prevJson.map(bucketRowsOf(_).getOrElse(n, 0L)).getOrElse(0L) +
-          withRows.map { case (_, js) => bucketRowsOf(js).getOrElse(n, 0L) }.sum
-        // conservative envelope (per-epoch stats span ALL buckets): still
-        // a valid superset guard for pruning, residual filter stays exact
-        val sts = (prevJson.toSeq ++ withRows.map(_._2)).map(statsOf)
-        val env =
-          if (sts.nonEmpty && sts.forall(_.isDefined) &&
-              sts.flatten.map(_._1).distinct.size == 1)
-            Some((sts.flatten.head._1,
-              sts.flatten.map(_._2).min, sts.flatten.map(_._3).max))
-          else None
-        val body =
-          s"""{"bucket_compact_hi": $hi, "bucket": $n, "rows": $rows,
-             | "schema_md5": "${ExactlyOnceSink.schemaMd5(src.schema)}",
-             | "buckets": {"$n": $rows},
-             | ${statsJson(env)}
-             | "data_path": "data/${new Path(dataPath).getName}"}""".stripMargin
-        writeAtomic(f, bcompactManifest(hi, n), body)
-        logAppend(f, body)
-      }
-    }
-  }
-  // --------------------------------------------------------------------
-
   private def shadowCol(b: String): String = s"__$b"
 
   /** All shadow bucket subdirectories of a source root (bucketed sinks;
@@ -706,20 +616,14 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     readCurrent(spark, f, readLog(f), bucket, timeRange)
   }
 
-  /** [[read]] over an already-read log view: horizon, epoch list, bucket
-    * snapshots and manifest bodies all come from `v`. */
+  /** [[read]] over an already-read log view: horizon, epoch list and
+    * manifest bodies all come from `v`. */
   private def readCurrent(spark: SparkSession, f: FileSystem, v: LogView,
       bucket: Option[Long], timeRange: Option[(Long, Long)]): DataFrame = {
-    val srcs0 = v.current
-    if (srcs0.isEmpty)
+    val srcs = v.current
+    if (srcs.isEmpty)
       throw new IllegalStateException(s"no committed epochs in $tableDir")
-    val bsnaps = v.bucketSnaps
-    if (bucket.isEmpty && timeRange.isEmpty && bsnaps.isEmpty)
-      return readSrcs(spark, f, srcs0)
-    val bHi: Map[Long, Long] = bsnaps.toMap
-    // bucket snapshots join the source list; the epoch slices they cover
-    // are masked during path expansion below
-    val srcs = srcs0 ++ bsnaps.map { case (n, h) => bsnapSrc(n, h) }
+    if (bucket.isEmpty && timeRange.isEmpty) return readSrcs(spark, f, srcs)
     val sc = timeRange.map { _ =>
       statsCol.getOrElse(throw new IllegalArgumentException(
         s"time-range read requires a statsCol-configured sink ($tableDir)"))
@@ -728,64 +632,31 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
       bucketCol.getOrElse(throw new IllegalArgumentException(
         s"bucket read requires a bucketed sink (bucketCol=None in $tableDir)"))
     }
+    val merge = readerEvolved(f) // the layout guard, before any pruning
     // both pruning dimensions — per-bucket row counts and the event-time
     // envelope — come from the logged manifest bodies
-    val jsons = srcs.map { case (_, m) => v.body(m) }
-    val merge = readerEvolved(f)
-    def emptyResult(): DataFrame = {
-      val allPaths = (bucketCol match {
-        case Some(bn) => srcs0.flatMap { case (dp, _) => bucketDirs(f, dp, bn) }
-        case None => srcs0.map(_._1)
-      }) ++ bsnaps.map { case (n, h) => bcompactData(h, n) }
-      if (allPaths.isEmpty) // keep the designed loud diagnostic, not Spark's schema error
-        throw new IllegalStateException(
-          s"no data files under committed sources in $tableDir (all epochs empty?)")
-      withResidual(readPaths(spark, allPaths, merge).limit(0), sc, timeRange)
-    }
-    val sel = srcs.zip(jsons).collect { case ((dp, _), js)
-        if bucket.forall(b => bucketRowsOf(js).getOrElse(b, 0L) > 0L) &&
+    val sel = srcs.collect { case (dp, m)
+        if bucket.forall(b => bucketRowsOf(v.body(m)).getOrElse(b, 0L) > 0L) &&
           timeRange.forall { case (fromUs, untilUs) =>
-            sc.flatMap(c => statsForPruning(js, c)) match {
+            sc.flatMap(c => statsForPruning(v.body(m), c)) match {
               case Some((lo, hi)) => hi >= fromUs && lo <= untilUs
               case None => true // no stats recorded: cannot prune, must read
             }
           } => dp
     }
-    if (sel.isEmpty) return emptyResult()
-    def epochIdOf(dp: String): Option[Long] = {
-      val nm = new Path(dp).getName
-      if (nm.startsWith("epoch=")) nm.stripPrefix("epoch=").toLongOption else None
+    val paths = (bname, bucketCol) match {
+      // pruned single-bucket read: the real bucket column is in the data
+      // files — no restoration
+      case (Some(bn), _) => sel.map(dp => s"$dp/${shadowCol(bn)}=${bucket.get}")
+      case (None, Some(bn)) => sel.flatMap(bucketDirs(f, _, bn))
+      case (None, None) => sel
     }
-    // expansion of one selected source into leaf paths; an epoch's
-    // bucket slice is masked when a bucket snapshot covers it
-    def expand(dp: String): Seq[String] = {
-      val nm = new Path(dp).getName
-      if (nm.startsWith("bcompact-")) {
-        // sel's bucketRowsOf guard already dropped other buckets' snaps
-        // for a pruned read; the snapshot dir is itself a leaf
-        Seq(dp)
-      } else (bname, bucketCol) match {
-        case (Some(bn), _) => // pruned single-bucket read
-          val covered = epochIdOf(dp)
-            .exists(e => bHi.get(bucket.get).exists(e <= _))
-          if (covered) Nil
-          // the real bucket column is in the data files — no restoration
-          else Seq(s"$dp/${shadowCol(bn)}=${bucket.get}")
-        case (None, Some(bn2)) =>
-          val dirs = bucketDirs(f, dp, bn2)
-          epochIdOf(dp) match {
-            case Some(e) => dirs.filterNot { d =>
-              new Path(d).getName.stripPrefix(shadowCol(bn2) + "=").toLongOption
-                .exists(b0 => bHi.get(b0).exists(e <= _))
-            }
-            case None => dirs // global snapshot: nothing covers it
-          }
-        case (None, None) => Seq(dp)
-      }
-    }
-    val paths = sel.flatMap(expand)
-    if (paths.isEmpty) return emptyResult()
-    withResidual(readPaths(spark, paths, merge), sc, timeRange)
+    // nothing selected: zero rows with the table's schema (readSrcs keeps
+    // the designed loud diagnostic when no source has data files at all)
+    val df =
+      if (paths.isEmpty) readSrcs(spark, f, srcs).limit(0)
+      else readPaths(spark, paths, merge)
+    withResidual(df, sc, timeRange)
   }
 
   /** Stats are a superset guard, not a row predicate: apply the exact
@@ -823,15 +694,13 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
   def describe(spark: SparkSession): DataFrame = {
     import spark.implicits._
     val v = readLog(fs())
-    val srcs = v.current ++ v.bucketSnaps.map { case (n, h) => bsnapSrc(n, h) }
-    srcs.map { case (dp, m) =>
+    v.current.map { case (dp, m) =>
       val js = v.body(m)
       val name = new Path(dp).getName
       val rows = """"rows":\s*(\d+)""".r.findFirstMatchIn(js).map(_.group(1).toLong)
       val st = statsOf(js)
       (name,
-        if (name.startsWith("compact-")) "snapshot"
-        else if (name.startsWith("bcompact-")) "bucket-snapshot" else "epoch",
+        if (name.startsWith("compact-")) "snapshot" else "epoch",
         rows.map(java.lang.Long.valueOf).orNull,
         schemaMd5Of(js).orNull,
         bucketRowsOf(js).size,
@@ -1021,18 +890,11 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
     val v = readLog(f)
     val hi = v.hi
     val maxEpoch = v.epochs.lastOption.getOrElse(hi.getOrElse(-1L))
-    val activeB = v.bucketSnaps.toMap
     val live: Set[String] =
-      v.epochs.map(e => s"epoch=$e").toSet ++ hi.map(h => s"compact-$h").toSet ++
-        activeB.map { case (n, h) => new Path(bcompactData(h, n)).getName }
+      v.epochs.map(e => s"epoch=$e").toSet ++ hi.map(h => s"compact-$h").toSet
     def superseded(name: String): Boolean = name match {
       case s if s.startsWith("epoch=") =>
         s.stripPrefix("epoch=").toLongOption.exists(_ <= maxEpoch)
-      case s if s.startsWith("bcompact-") =>
-        """bcompact-(\d+)-(-?\d+)""".r.findFirstMatchIn(s).exists { m =>
-          val h = m.group(1).toLong; val n = m.group(2).toLong
-          h <= hi.getOrElse(-1L) || activeB.get(n).exists(h < _)
-        }
       case s if s.startsWith("compact-") =>
         s.stripPrefix("compact-").toLongOption.exists(c => hi.exists(c < _))
       case _ => false // unknown layout: never delete
@@ -1057,19 +919,15 @@ class ExactlyOnceSink(tableDir: String, bucketCol: Option[String] = None,
       .map(_.getPath)
       .filter(p => !live.contains(p.getName) && superseded(p.getName))
     victims.foreach(p => f.delete(p, true))
-    // GC obsolete bucket-snapshot manifests (their data dirs just went,
-    // and the log no longer references them) and the commit-log segments
-    // below the live head range (compaction moved first_seg past them;
-    // they only existed for in-flight readers). A table without a head
-    // has no commit log, so nothing to drop.
+    // GC the commit-log segments below the live head range (compaction
+    // moved first_seg past them; they only existed for in-flight
+    // readers). A table without a head has no commit log, so nothing to
+    // drop.
     v.head.foreach { case (first, _) =>
-      val activeNames = activeB.map { case (n, h) => bcompactManifest(h, n).getName }.toSet
       f.listStatus(manifestDir).toSeq.map(_.getPath)
         .filter { p =>
           val s = p.getName
-          if (s.startsWith("bcompact-") && s.endsWith(".json"))
-            !activeNames.contains(s) && superseded(s.stripSuffix(".json"))
-          else s.startsWith("log-") && s.endsWith(".json") && s != logHead.getName &&
+          s.startsWith("log-") && s.endsWith(".json") && s != logHead.getName &&
             s.stripPrefix("log-").stripSuffix(".json").toLongOption.exists(_ < first)
         }
         .foreach(p => f.delete(p, false))

@@ -41,7 +41,9 @@ object IndexMaintenance {
    * ids indexed by THIS call (empty when already caught up). Epochs are
    * processed in ascending order so a mid-loop kill leaves a contiguous
    * prefix — `readBetween(lastIndexed, ...)` style consumers of the
-   * index table see a consistent frontier.
+   * index table see a consistent frontier. Each epoch is written before
+   * the next epoch's increment is built, so an increment may read
+   * `index` itself ([[semDedupCatchUp]]'s history-dependent fold does).
    */
   def catchUp(spark: SparkSession, corpus: ExactlyOnceSink,
       index: ExactlyOnceSink)(incrementFn: DataFrame => DataFrame): Seq[Long] = {
@@ -171,11 +173,12 @@ object IndexMaintenance {
 
   /**
    * SemDeDup maintenance loop: keep the KEPT-VECTOR history table caught
-   * up with the corpus, epoch by epoch, exactly once. Unlike
-   * [[catchUp]]'s row-local contract, the increment here is
-   * HISTORY-DEPENDENT — each epoch's verdicts consult every vector kept
-   * so far ([[graft.operators.Similarity.semDedupIncrement]]'s greedy
-   * claim rule) — so the fold order is part of the semantics: epochs are
+   * up with the corpus, epoch by epoch, exactly once, on [[catchUp]]'s
+   * loop and compaction guard. Unlike its row-local contract, the
+   * increment here is HISTORY-DEPENDENT — each epoch's verdicts consult
+   * every vector kept so far
+   * ([[graft.operators.Similarity.semDedupIncrement]]'s greedy claim
+   * rule) — so the fold order is part of the semantics: epochs are
    * processed ascending, which makes any run over the same epoch
    * sequence (including a kill/resume) produce the identical history
    * table. A replayed epoch is absorbed twice over: the sink's manifest
@@ -187,7 +190,10 @@ object IndexMaintenance {
    * `(corpus_id, cv, cn, centroid)` — partition/bucket it by `centroid`
    * so the per-trigger probe prunes to the request cells. `seeds` is the
    * FROZEN centroid table (same table the gate broadcasts); changing it
-   * invalidates the history (cells shift) — rebuild, don't mix.
+   * invalidates the history (cells shift) — rebuild, don't mix. After
+   * the guard refuses a compacted corpus, the rebuild is one
+   * `semDedupAssigned` batch over `corpus.read()`, committed as the
+   * compaction horizon's epoch.
    *
    * Returns the epoch ids folded by this call.
    */
@@ -196,30 +202,19 @@ object IndexMaintenance {
       seeds: DataFrame, minCosQ: Long): Seq[Long] = {
     import org.apache.spark.sql.functions.{col, lit}
     import graft.operators.{Similarity, VectorOps}
-    corpus.compactHi().filterNot(history.committed).foreach { h =>
-      throw new IllegalStateException(
-        s"corpus epochs <= $h were compacted into a snapshot before being " +
-        "folded into the semDedup history; rebuild the history from " +
-        "corpus.read() (one semDedupAssigned batch committed as epoch " +
-        s"$h) and resume maintenance from there")
-    }
-    val todo = corpus.committedEpochs().filterNot(history.committed).sorted
-    todo.foreach { e =>
-      val chunk = corpus.readBetween(spark, e - 1, e)
-        .select(col(idCol).as("corpus_id"), col(vecCol).as("cv"),
-          VectorOps.norm_q(col(vecCol)).as("cn"))
+    catchUp(spark, corpus, history) { raw =>
+      val chunk = raw.select(col(idCol).as("corpus_id"), col(vecCol).as("cv"),
+        VectorOps.norm_q(col(vecCol)).as("cn"))
       val hist =
         if (history.committedEpochs().isEmpty && history.compactHi().isEmpty)
           chunk.select(col("corpus_id"), col("cv"), col("cn"),
             lit(0L).as("centroid")).where(lit(false))
         else history.read(spark)
           .select(col("corpus_id"), col("cv"), col("cn"), col("centroid"))
-      val kept = Similarity.semDedupIncrement(hist, chunk, seeds, minCosQ)
+      Similarity.semDedupIncrement(hist, chunk, seeds, minCosQ)
         .where(col("kept")).select(col("corpus_id"), col("centroid"))
         .join(chunk, Seq("corpus_id"))
         .select(col("corpus_id"), col("cv"), col("cn"), col("centroid"))
-      history.write(kept, e)
     }
-    todo
   }
 }

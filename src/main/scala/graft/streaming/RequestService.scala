@@ -3,6 +3,7 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.GraftTopology
 import graft.operators.RequestResponse
 
 /**
@@ -37,21 +38,17 @@ import graft.operators.RequestResponse
  */
 object RequestService {
 
+  /** Every service's micro-batch trigger. */
+  private val trigger = Trigger.ProcessingTime("1 second")
+
   /** The one service harness: request stream → per-micro-batch transform
-    * → exactly-once response table. Each service below is its transform. */
+    * → exactly-once response table, started through
+    * [[graft.GraftTopology.startSink]]. Each service below is its
+    * transform. */
   private def startService(requests: DataFrame, responseTable: String,
-      checkpoint: String, trigger: Trigger)
-      (batchFn: DataFrame => DataFrame): StreamingQuery = {
-    val sink = new ExactlyOnceSink(responseTable)
-    requests.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .trigger(trigger)
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
-        sink.write(batchFn(batch.toDF()), id)
-      }
-      .start()
-  }
+      checkpoint: String)(batchFn: DataFrame => DataFrame): StreamingQuery =
+    GraftTopology.from(requests).startSink(responseTable, checkpoint,
+      trigger = trigger, perBatch = batchFn)
 
   /**
    * Start the text-match service: per micro-batch of requests
@@ -61,9 +58,8 @@ object RequestService {
   def startTextMatch(spark: SparkSession, requests: DataFrame, corpus: DataFrame,
       reqId: String, reqText: String, docId: String, docText: String,
       responseTable: String, checkpoint: String,
-      k: Int = 5, n: Int = 2,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      k: Int = 5, n: Int = 2): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.matchText(spark, batch, corpus,
         reqId, reqText, docId, docText, k, n))
 
@@ -79,9 +75,8 @@ object RequestService {
   def startIndexedTextMatch(spark: SparkSession, requests: DataFrame,
       shingleIndex: DataFrame, reqId: String, reqText: String,
       responseTable: String, checkpoint: String,
-      k: Int = 5, n: Int = 2,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      k: Int = 5, n: Int = 2): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.matchTextFromIndex(batch, shingleIndex, reqId, reqText, k, n))
 
   /**
@@ -96,9 +91,8 @@ object RequestService {
       bandIndex: DataFrame, corpus: DataFrame,
       reqId: String, reqText: String, docId: String, docText: String,
       responseTable: String, checkpoint: String,
-      n: Int = 3, bands: Int = 8, minJaccQ: Long = 500L,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      n: Int = 3, bands: Int = 8, minJaccQ: Long = 500L): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.nearDupProbe(batch, bandIndex, corpus,
         reqId, reqText, docId, docText, n, bands, minJaccQ))
 
@@ -112,9 +106,8 @@ object RequestService {
    */
   def startSpanProbe(spark: SparkSession, requests: DataFrame,
       spanDf: DataFrame, reqId: String, reqText: String,
-      responseTable: String, checkpoint: String, n: Int = 8,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      responseTable: String, checkpoint: String, n: Int = 8): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.spanDupProbe(batch, spanDf, reqId, reqText, n))
 
   /**
@@ -127,9 +120,8 @@ object RequestService {
    */
   def startRareTokenGate(spark: SparkSession, requests: DataFrame,
       lexicon: DataFrame, reqId: String, reqText: String,
-      responseTable: String, checkpoint: String, minTf: Long = 2L,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      responseTable: String, checkpoint: String, minTf: Long = 2L): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.rareTokenProbe(batch, lexicon, reqId, reqText, minTf))
 
   /**
@@ -146,9 +138,8 @@ object RequestService {
       enrichedModel: DataFrame, c1: DataFrame, vocabPlus1: Long,
       reqId: String, reqText: String,
       responseTable: String, checkpoint: String,
-      headMin: Long, midMin: Long,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      headMin: Long, midMin: Long): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.lmScoreProbe(batch, enrichedModel, c1, vocabPlus1,
         reqId, reqText, headMin, midMin))
 
@@ -165,9 +156,8 @@ object RequestService {
       targetEnriched: DataFrame, targetC1: DataFrame, targetVocabPlus1: Long,
       rawEnriched: DataFrame, rawC1: DataFrame, rawVocabPlus1: Long,
       reqId: String, reqText: String,
-      responseTable: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      responseTable: String, checkpoint: String): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.dsirProbe(batch,
         targetEnriched, targetC1, targetVocabPlus1,
         rawEnriched, rawC1, rawVocabPlus1, reqId, reqText))
@@ -208,14 +198,13 @@ object RequestService {
       history: DataFrame, seeds: DataFrame,
       reqId: String, reqVec: String,
       responseTable: String, checkpoint: String, minCosQ: Long,
-      pruneHistory: Boolean = false,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+      pruneHistory: Boolean = false): StreamingQuery = {
     // once at start: empty seeds would silently answer ZERO rows per
     // trigger (nothing assignable) — a gate that blackholes its stream
     require(!seeds.isEmpty,
       "semDedup gate started with an EMPTY seeds table — nothing can be " +
       "assigned; rebuild the centroid table (see PrepareSemGate)")
-    startService(requests, responseTable, checkpoint, trigger) { batch =>
+    startService(requests, responseTable, checkpoint) { batch =>
       import org.apache.spark.sql.functions.col
       val h = if (!pruneHistory) history
         else {
@@ -240,9 +229,8 @@ object RequestService {
       index: DataFrame, seeds: DataFrame,
       reqId: String, reqVec: String,
       responseTable: String, checkpoint: String,
-      k: Int = 5, nProbe: Int = 4,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger) { batch =>
+      k: Int = 5, nProbe: Int = 4): StreamingQuery =
+    startService(requests, responseTable, checkpoint) { batch =>
       import org.apache.spark.sql.functions.col
       val q = batch.select(col(reqId).as("query_id"), col(reqVec).as("qv"),
         graft.operators.VectorOps.norm_q(col(reqVec)).as("qn"))
@@ -264,9 +252,8 @@ object RequestService {
       index: DataFrame, seeds: DataFrame, books: DataFrame,
       reqId: String, reqVec: String, dim: Int, m: Int,
       responseTable: String, checkpoint: String,
-      k: Int = 5, nProbe: Int = 4,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      k: Int = 5, nProbe: Int = 4): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       graft.operators.ProductQuant.ivfAdcSearchIndex(batch, index, seeds, books,
         reqId, reqVec, dim, m, k, nProbe)
         .withColumnRenamed("query_id", "request_id"))
@@ -285,9 +272,8 @@ object RequestService {
       postings: DataFrame, dfT: DataFrame, stats: DataFrame,
       reqId: String, reqText: String,
       responseTable: String, checkpoint: String,
-      k: Int = 5, maxTerms: Int = 8,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger) { batch =>
+      k: Int = 5, maxTerms: Int = 8): StreamingQuery =
+    startService(requests, responseTable, checkpoint) { batch =>
       val qt = graft.operators.TextSearch.queryTerms(batch, reqId, reqText, maxTerms)
       graft.operators.TextSearch.bm25TopK(qt, postings, dfT, stats, k)
     }
@@ -305,10 +291,9 @@ object RequestService {
    */
   def startPhraseSearch(spark: SparkSession, requests: DataFrame,
       positions: DataFrame, reqId: String, reqPhrase: String,
-      responseTable: String, checkpoint: String,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery = {
+      responseTable: String, checkpoint: String): StreamingQuery = {
     val compact = positions.schema.fieldNames.contains("positions")
-    startService(requests, responseTable, checkpoint, trigger) { batch =>
+    startService(requests, responseTable, checkpoint) { batch =>
       val qt = graft.operators.TextSearch.phraseQueryTerms(batch, reqId, reqPhrase)
       if (compact) graft.operators.TextSearch.phraseMatchesCompact(qt, positions)
       else graft.operators.TextSearch.phraseMatches(qt, positions)
@@ -323,9 +308,8 @@ object RequestService {
   def startEmbeddingMatch(spark: SparkSession, requests: DataFrame, corpus: DataFrame,
       reqId: String, reqVec: String, docId: String, docVec: String,
       responseTable: String, checkpoint: String,
-      k: Int = 5,
-      trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    startService(requests, responseTable, checkpoint, trigger)(batch =>
+      k: Int = 5): StreamingQuery =
+    startService(requests, responseTable, checkpoint)(batch =>
       RequestResponse.matchEmbedding(batch, corpus,
         reqId, reqVec, docId, docVec, k))
 }

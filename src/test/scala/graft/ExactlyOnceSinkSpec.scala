@@ -506,7 +506,7 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     }
   }
 
-  test("per-bucket compaction: exact reads + pruning across interleaved writes, reruns, GC, and full compaction") {
+  test("bucketed + stats sink: exact reads and pruning across interleaved writes, full compaction and GC") {
     import spark.implicits._
     val dir = Files.createTempDirectory("eosbc").toString
     val sink = new ExactlyOnceSink(dir, bucketCol = Some("hb"), statsCol = Some("ts"),
@@ -534,41 +534,22 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     wr((1L, 0L, 1000L), (2L, 1L, 1000L))
     wr((3L, 1L, 2000L), (4L, 2L, 2000L))
     wr((5L, 0L, 3000L), (6L, 3L, 3000L))
-    sink.compactBuckets(spark, 0 to 1)
     checkAll()
-    // the pruned read serves bucket 1 from its snapshot ONLY — covered
-    // epoch slices must not be listed
-    val b1files = sink.read(spark, bucket = Some(1L)).inputFiles
-    assert(b1files.nonEmpty && b1files.forall(_.contains("bcompact-")), b1files.mkString(", "))
-
     wr((7L, 1L, 4000L), (8L, 0L, 4000L))
-    checkAll() // snapshot + post-snapshot epoch compose in one read
-    sink.compactBuckets(spark, 1 to 3) // bucket 1 folds snap+new; 2..3 fresh
     checkAll()
-    sink.compactBuckets(spark, 0 to 3) // re-run (resume replay analog)...
-    sink.compactBuckets(spark, 0 to 3) // ...and again: idempotent at same hi
-    checkAll()
-    assert(sink.describe(spark).where($"kind" === "bucket-snapshot").count() == 4)
 
-    // incremental + time-travel reads ignore bucket snapshots: exact
-    // per-epoch history stays intact
+    // incremental + time-travel reads: exact per-epoch history
     assert(ids(sink.readBetween(spark, 1L)) == Seq(5L, 6L, 7L, 8L))
     assert(ids(sink.readAsOf(spark, 1L)) == Seq(1L, 2L, 3L, 4L))
 
-    // GC drops the superseded older bucket snapshots, keeps the active
-    assert(sink.gcUnreferenced() >= 2)
+    // nothing is superseded before a compaction: GC deletes nothing
+    assert(sink.gcUnreferenced() == 0)
     checkAll()
 
-    // a full compaction retires every bucket snapshot
+    // a full compaction folds every epoch; GC then drops their dirs
     sink.compact(spark, targetPartitions = 1)
-    sink.gcUnreferenced()
+    assert(sink.gcUnreferenced() == 4)
     checkAll()
-    val leftover = new java.io.File(s"$dir/_manifest").listFiles()
-      .map(_.getName).filter(_.startsWith("bcompact-"))
-    assert(leftover.isEmpty, leftover.mkString(", "))
-    val leftoverData = new java.io.File(s"$dir/data").listFiles()
-      .map(_.getName).filter(_.startsWith("bcompact-"))
-    assert(leftoverData.isEmpty, leftoverData.mkString(", "))
   }
 
   test("gcUnreferenced from a plain maintenance instance preserves the recorded layout") {

@@ -6,6 +6,7 @@ import java.sql.Timestamp
 import org.apache.spark.sql.Encoders
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.ExtractHtmlText.extract_html_text
 import graft.sources.{PageGen, PageGenConfig}
@@ -178,11 +179,16 @@ class GraftTopologySpec extends SparkSpec {
       PageLite(s"h${i % 3}.example", ts(1700000000L + i), 10 + i))
     val topo = GraftTopology.from(input.toDF(), "mem_src")
       .op("gate")(_.where(col("text_len") >= 12))
-    val q = topo.startSink(table, cp, triggerSec = 1)
+    // a pass-through perBatch runs once per batch: with no bucket or
+    // stats column to check, start-up never applies it to an empty batch
+    val perBatchCalls = new java.util.concurrent.atomic.AtomicInteger()
+    val q = topo.startSink(table, cp, trigger = Trigger.ProcessingTime("1 second"),
+      perBatch = { b => perBatchCalls.incrementAndGet(); b })
     try {
       input.addData(rows.take(10)); q.processAllAvailable()
       input.addData(rows.drop(10)); q.processAllAvailable()
     } finally q.stop()
+    assert(perBatchCalls.get == q.lastProgress.batchId + 1)
     val got = new ExactlyOnceSink(table).read(spark)
       .select(col("host"), col("text_len"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toSet

@@ -144,6 +144,13 @@ class IndexMaintenanceSpec extends SparkSpec {
       IndexMaintenance.catchUp(spark, corpus, index)(shingleInc)
     }
     assert(e.getMessage.contains("compacted"))
+    // the semDedup history fold runs on the same loop and guard
+    val eSem = intercept[IllegalStateException] {
+      IndexMaintenance.semDedupCatchUp(spark, corpus,
+        new ExactlyOnceSink(s"$dir/history"), "doc_id", "text",
+        seeds = spark.emptyDataFrame, minCosQ = 0L)
+    }
+    assert(eSem.getMessage.contains("compacted"))
 
     // documented recovery: one single-batch increment over the snapshot,
     // committed under the compaction horizon — maintenance then resumes
