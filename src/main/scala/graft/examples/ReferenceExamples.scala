@@ -72,9 +72,9 @@ object ReferenceExamples {
    *  string-keyed corpora. `templates` needs (template_url,
    *  template_text); output rows are (request_id, doc_id, score_q, rk)
    *  over those hashes. Streaming twin: the long-running DRPC service
-   *  (`RequestService.startTextMatch` / `startIndexedTextMatch` — the
-   *  q33/q52 serving plane), which runs this exact match per request
-   *  micro-batch with exactly-once responses. */
+   *  (`RequestService.start` serving `RequestResponse.matchText` /
+   *  `matchTextFromIndex` — the q33/q52 serving plane), which runs this
+   *  exact match per request micro-batch with exactly-once responses. */
   def e2FaceDetection(spark: SparkSession, pages: DataFrame,
       templates: DataFrame, minScoreQ: Long = 500L): DataFrame =
     GraftTopology.from(pages)

@@ -7,9 +7,9 @@ import org.apache.spark.sql.types.{BinaryType, IntegerType, LongType, StringType
 /**
  * Portable HyperLogLog — a distinct-count sketch whose REGISTERS are an
  * ordinary table any engine can rebuild bit-for-bit. Spark's own
- * `approx_count_distinct` (used by [[Sketches.approxDistinctFingerprints]])
- * is a black box: its binary sketch can't be value-checked by an oracle,
- * persisted portably, or merged outside Spark. This twin trades a few
+ * `approx_count_distinct` (the built-in HLL++ aggregate) is a black box:
+ * its binary sketch can't be value-checked by an oracle, persisted
+ * portably, or merged outside Spark. This twin trades a few
  * points of constant-factor accuracy for three properties this engine
  * treats as load-bearing:
  *

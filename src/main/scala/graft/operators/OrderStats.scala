@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.LongType
 
 /**
  * EXACT distributed order statistics — the exact twin of
- * [[Sketches.approxTokenQuantiles]] (Greenwald-Khanna), for the places a
+ * Spark's built-in `percentile_approx` (Greenwald-Khanna), for the places a
  * corpus-QA readout must be digit-reproducible (gate thresholds, release
  * dashboards, regression diffs between crawls): an approximate median
  * that drifts with `accuracy` cannot anchor a "did the length
@@ -231,7 +231,7 @@ object OrderStats {
    * pass 2 is a broadcast join of the per-group bounds table (groups ×
    * 2 longs — KBs at any corpus size) back onto the scan, so the
    * corpus itself is never shuffled. The single-pass alternative is the
-   * approximate [[Sketches.approxTokenQuantiles]]; use this one where
+   * approximate built-in `percentile_approx`; use this one where
    * the gate must be digit-reproducible.
    *
    * NULL values and rows of groups with no non-NULL values read

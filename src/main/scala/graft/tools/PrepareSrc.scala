@@ -1,9 +1,7 @@
 package graft.tools
 
-import org.apache.spark.sql.functions._
-
-import graft.GraftSession
-import graft.sources.{PageGen, PageGenConfig}
+import graft.{GraftSession, StreamPipelineBench}
+import graft.sources.PageGenConfig
 
 /**
  * Materialize the deterministic page stream as time-ordered parquet at an
@@ -24,12 +22,7 @@ object PrepareSrc {
     spark.sparkContext.setLogLevel("ERROR")
     val cfg = PageGenConfig(nPages = nPages, nHosts = nHosts,
       paraMult = paraMult, parallelism = 32)
-    // time-ordered arrival (realistic crawl order): see
-    // StreamPipelineBench.prepare for why id-order would hot-spot one task
-    PageGen.rawPages(spark, cfg)
-      .repartitionByRange(nFiles, col("warc_ts"))
-      .sortWithinPartitions(col("warc_ts"))
-      .write.parquet(outDir)
+    StreamPipelineBench.prepare(spark, cfg, outDir, nFiles)
     println(s"prepared $nPages pages in $outDir ($nFiles files)")
     spark.stop()
   }

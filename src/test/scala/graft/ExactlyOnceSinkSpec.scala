@@ -570,4 +570,17 @@ class ExactlyOnceSinkSpec extends SparkSpec {
     // and a flat open still fails the guard instead of mis-reading
     intercept[IllegalStateException] { new ExactlyOnceSink(dir).read(spark) }
   }
+
+  test("sink time travel: readAsOf returns the table at an earlier epoch") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("tt").toString
+    val sink = new graft.streaming.ExactlyOnceSink(dir)
+    (0L until 4L).foreach(e => sink.write(Seq((e.toInt, s"v$e")).toDF("id", "v"), e))
+    assert(sink.readAsOf(spark, 1L).collect().map(_.getInt(0)).sorted.toSeq == Seq(0, 1))
+    assert(sink.readAsOf(spark, 3L).count() == 4)
+    // compaction trades per-epoch history for fewer files — loudly
+    sink.compact(spark, 1)
+    intercept[IllegalStateException] { sink.readAsOf(spark, 1L) }
+    assert(sink.readAsOf(spark, 99L).count() == 4)
+  }
 }

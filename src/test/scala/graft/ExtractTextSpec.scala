@@ -58,7 +58,11 @@ class ExtractTextSpec extends AnyFunSuite {
       "&#9;", "&#10;", "&#160;", "&#xA0;", "&#8232;", " ",
       "<scripté>", "<styleé>", "</SCRIPT>", "<script><script>",
       "</script >", "<\tp>", "< p>", "&#x110000;", "&#1114112;", "\u000b",
-      "\r", "\f", "<![CDATA[", "]]>", "&#38;#38;", "　")
+      "\r", "\f", "<![CDATA[", "]]>", "&#38;#38;", "　",
+      "</", "<>", "=\"", "&#x", "&am", "<a href=\"x>y\">", "<br/>", "&AMP;",
+      "&#X41;", "&#0;", "&#x0;", "<!---->", "<!--", "-->", "<!", "<?php ?>",
+      "<?", "?>", "<style", "<script", "&quot", ";", "&;", "&#xfffd;",
+      "\ufffd", "a=b", "'", "<p/>", "<p\n>", "&lt;script&gt;", "&#60;")
     var caseI = 0
     while (caseI < 5000) {
       val len = (graft.sources.PageGen.rnd(11L, 0, caseI) >>> 1).toInt % 40

@@ -32,8 +32,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("rscp").toString
     val table = Files.createTempDirectory("rstbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startTextMatch(spark, in.toDF(), corpus,
-      "request_id", "qtext", "doc_id", "text", table, cp, k = 3, n = 2)
+    def start() = RequestService.start(in.toDF(), table, cp)(b => RequestResponse.matchText(
+      spark, b, corpus, "request_id", "qtext", "doc_id", "text", k = 3, n = 2))
 
     // first half of the requests, then kill
     var q = start()
@@ -78,8 +78,9 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("ricp").toString
     val table = Files.createTempDirectory("ritbl").toString
     val in = MemoryStream[VecReq](Encoders.product[VecReq], spark)
-    def start() = RequestService.startIndexedEmbeddingMatch(spark, in.toDF(), index, seeds,
-      "request_id", "qvec", table, cp, k = 3, nProbe = 4)
+    def start() = RequestService.start(in.toDF(), table, cp)(b => Similarity.ivfSearchIndex(
+      b.select($"request_id".as("query_id"), $"qvec".as("qv"), VectorOps.norm_q($"qvec").as("qn")),
+      index, seeds, k = 3, nProbe = 4).withColumnRenamed("query_id", "request_id"))
     // two request batches with a kill/resume between them: re-delivered
     // epochs must not duplicate responses
     var q = start()
@@ -134,8 +135,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("ticp").toString
     val table = Files.createTempDirectory("titbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startIndexedTextMatch(spark, in.toDF(), index,
-      "request_id", "qtext", table, cp, k = 3, n = 2)
+    def start() = RequestService.start(in.toDF(), table, cp)(b =>
+      RequestResponse.matchTextFromIndex(b, index, "request_id", "qtext", k = 3, n = 2))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
@@ -191,8 +192,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("bm25cp").toString
     val table = Files.createTempDirectory("bm25tbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startBm25Search(spark, in.toDF(), postings,
-      dfT, stats, "request_id", "qtext", table, cp, k = 4, maxTerms = 8)
+    def start() = RequestService.start(in.toDF(), table, cp)(b => TextSearch.bm25TopK(
+      TextSearch.queryTerms(b, "request_id", "qtext", maxTerms = 8), postings, dfT, stats, k = 4))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
@@ -243,8 +244,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("phrcp").toString
     val table = Files.createTempDirectory("phrtbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startPhraseSearch(spark, in.toDF(), positions,
-      "request_id", "qtext", table, cp)
+    def start() = RequestService.start(in.toDF(), table, cp)(b => TextSearch.phraseMatches(
+      TextSearch.phraseQueryTerms(b, "request_id", "qtext"), positions))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
@@ -285,8 +286,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("spcp").toString
     val table = Files.createTempDirectory("sptbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startSpanProbe(spark, in.toDF(), spanDf,
-      "request_id", "qtext", table, cp, n = 8)
+    def start() = RequestService.start(in.toDF(), table, cp)(b =>
+      RequestResponse.spanDupProbe(b, spanDf, "request_id", "qtext", n = 8))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
@@ -333,8 +334,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("ndcp").toString
     val table = Files.createTempDirectory("ndtbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startNearDupProbe(spark, in.toDF(), bandIndex, corpus,
-      "request_id", "qtext", "doc_id", "text", table, cp, n = 3, bands = 8, minJaccQ = 500L)
+    def start() = RequestService.start(in.toDF(), table, cp)(b => RequestResponse.nearDupProbe(
+      b, bandIndex, corpus, "request_id", "qtext", "doc_id", "text", n = 3, bands = 8, minJaccQ = 500L))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
@@ -381,8 +382,9 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("rpqcp").toString
     val table = Files.createTempDirectory("rpqtbl").toString
     val in = MemoryStream[VecReq](Encoders.product[VecReq], spark)
-    def start() = RequestService.startIndexedPqMatch(spark, in.toDF(), index, seeds, books,
-      "request_id", "qvec", dim, m, table, cp, k = 3, nProbe = 4)
+    def start() = RequestService.start(in.toDF(), table, cp)(b => ProductQuant.ivfAdcSearchIndex(
+      b, index, seeds, books, "request_id", "qvec", dim, m, k = 3, nProbe = 4)
+      .withColumnRenamed("query_id", "request_id"))
     // kill/resume between the two request batches: re-delivered epochs
     // must not duplicate responses
     var q = start()
@@ -417,8 +419,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("rvcp").toString
     val table = Files.createTempDirectory("rvtbl").toString
     val in = MemoryStream[VecReq](Encoders.product[VecReq], spark)
-    val q = RequestService.startEmbeddingMatch(spark, in.toDF(), corpus,
-      "request_id", "qvec", "vec_id", "embedding", table, cp, k = 4)
+    val q = RequestService.start(in.toDF(), table, cp)(b => RequestResponse.matchEmbedding(
+      b, corpus, "request_id", "qvec", "vec_id", "embedding", k = 4))
     in.addData(reqRows.toIndexedSeq)
     q.processAllAvailable()
     q.stop()
@@ -454,8 +456,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("rtcp").toString
     val table = Files.createTempDirectory("rttbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startRareTokenGate(spark, in.toDF(), lexicon,
-      "request_id", "qtext", table, cp, minTf = 1L)
+    def start() = RequestService.start(in.toDF(), table, cp)(b =>
+      RequestResponse.rareTokenProbe(b, lexicon, "request_id", "qtext", minTf = 1L))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
@@ -503,8 +505,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("lmcp").toString
     val table = Files.createTempDirectory("lmtbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startLmGate(spark, in.toDF(), model, c1, v,
-      "request_id", "qtext", table, cp, headMin = 34000L, midMin = 32700L)
+    def start() = RequestService.start(in.toDF(), table, cp)(b => RequestResponse.lmScoreProbe(
+      b, model, c1, v, "request_id", "qtext", headMin = 34000L, midMin = 32700L))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
@@ -551,8 +553,8 @@ class RequestServiceSpec extends SparkSpec {
     val cp = Files.createTempDirectory("dsircp").toString
     val table = Files.createTempDirectory("dsirtbl").toString
     val in = MemoryStream[TextReq](Encoders.product[TextReq], spark)
-    def start() = RequestService.startDsirGate(spark, in.toDF(),
-      tM, tC, tV, rM, rC, rV, "request_id", "qtext", table, cp)
+    def start() = RequestService.start(in.toDF(), table, cp)(b =>
+      RequestResponse.dsirProbe(b, tM, tC, tV, rM, rC, rV, "request_id", "qtext"))
     var q = start()
     in.addData(reqRows.take(2).toIndexedSeq)
     q.processAllAvailable()
